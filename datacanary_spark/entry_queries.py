@@ -547,31 +547,6 @@ def session_window_stats(spark, sf_dir):
         F.max("n").alias("max_session_events"))
 
 
-def filter_pipeline_verdicts(spark, sf_dir):
-    """Full north-rule pipeline (heuristics + model UDFs + scrub) over the
-    documents table reshaped as pages; per-language verdict + scrub
-    rollup.
-
-    NOT a ``queries()`` entry: langid/ppl/scrub are numpy/Python-re, so
-    no SQL oracle exists and a registered row would be a permanent
-    ``no_oracle`` red (round-1 verdict item 2). Byte-level correctness
-    is enforced by the golden-twin tests (tests/test_filter_pipeline.py)
-    and bench.py measures it as ``filter_pipeline_full``; the
-    SQL-expressible heuristic slice is contract-covered by
-    ``heuristic_keep_by_lang`` and ``heuristic_rule_hits_by_lang``."""
-    from datacanary_spark.plans.pipeline import broadcast_models, filter_pages
-    from datacanary_spark.sources.fixtures import docs_as_pages
-
-    d = _t(spark, sf_dir, "documents")
-    pages = docs_as_pages(d)
-    v = filter_pages(pages, broadcast_models(spark))
-    return (v.groupBy("lang")
-             .agg(F.sum(F.col("keep").cast("long")).alias("kept"),
-                  F.sum((~F.col("keep")).cast("long")).alias("dropped"),
-                  F.sum("scrub_count").alias("scrubs"),
-                  F.bround(F.avg("ppl"), 4).alias("mean_ppl")))
-
-
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     return heuristic_keep_by_lang(spark, sf_dir)
 

@@ -64,13 +64,20 @@ def char_shingles(text_col: Column, k: int = 5, lowercase: bool = True) -> Colum
     norm = F.regexp_replace(text_col, r"\s+", " ")
     if lowercase:
         norm = F.lower(norm)
-    n = F.length(norm)
-    shingles = F.when(
-        n >= k,
-        F.transform(F.sequence(F.lit(1), n - k + 1),
-                    lambda i: F.substring(norm, i, k)),
-    ).otherwise(F.when(n > 0, F.array(norm)).otherwise(F.array().cast("array<string>")))
-    return F.array_distinct(shingles)
+
+    def shingles(t: Column) -> Column:
+        n = F.length(t)
+        return F.when(
+            n >= k,
+            F.transform(F.sequence(F.lit(1), n - k + 1),
+                        lambda i: F.substring(t, i, k)),
+        ).otherwise(F.when(n > 0, F.array(t)).otherwise(F.array().cast("array<string>")))
+
+    # bind the normalized text once as a lambda variable: lambda bodies
+    # are outside subexpression elimination, so capturing ``norm``
+    # directly re-normalizes the whole text per shingle (O(length²))
+    return F.array_distinct(
+        F.element_at(F.transform(F.array(norm), shingles), 1))
 
 
 def minhash_signature(shingles: Column, n_hashes: int = 16,
@@ -130,14 +137,6 @@ def simhash16(tokens: Column) -> Column:
     bits = F.zip_with(votes, powers,
                       lambda v, p: F.when(v > 0, p).otherwise(F.lit(0)))
     return F.aggregate(bits, F.lit(0), lambda acc, b: acc + b).cast("int")
-
-
-def hamming16(a: Column, b: Column) -> Column:
-    """Hamming distance between two 16-bit masks via popcount(a XOR b)."""
-    x = a.bitwiseXOR(b)
-    return sum(
-        (F.shiftright(x, i).bitwiseAND(F.lit(1))) for i in range(16)
-    ).alias("hamming")
 
 
 def make_simhash64_udf():

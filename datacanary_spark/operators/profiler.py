@@ -254,14 +254,3 @@ def analyse_dataframe(df: DataFrame, approx: bool = False) -> dict[str, dict[str
                 break
     return out
 
-
-def profile_df(spark, profile: dict[str, dict[str, Any]]) -> DataFrame:
-    """Long-format (column, type, stat, value-as-string) DataFrame view of
-    a profile dict — the relational IR used by summary aggregation."""
-    rows = []
-    for c, info in profile.items():
-        for stat, value in info["stats"].items():
-            rows.append((c, info["type"], stat, None if value is None else str(value)))
-    from datacanary_spark.schema import PROFILE_SCHEMA
-
-    return spark.createDataFrame(rows, PROFILE_SCHEMA)

@@ -567,14 +567,6 @@ def train_pq_codebooks(df: DataFrame, dim: int, vec_col: str = "embedding",
         data.unpersist()
 
 
-def _lit_vec(values) -> Column:
-    """One array<double> LITERAL node, not CreateArray(8 Literals):
-    the PQ expressions embed 128+ of these, and per-node Catalyst
-    analysis cost — not execution — dominated the literal path before
-    collapsing them (measured ~5 s plan build on the oracle query)."""
-    return F.lit([float(x) for x in values])
-
-
 def _pq_dists_col(vec: Column, codebooks: np.ndarray, m: int) -> Column:
     """Subspace-m distance array ``||c||^2 - 2*dot(s, c)`` as a compact
     Column: the books/norms are ONE nested literal node each and the

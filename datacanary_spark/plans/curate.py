@@ -20,6 +20,8 @@ The full training-data pipeline composed from the engine's tiers:
 Every stage is one of the already-tested operators; this module only
 composes them and accounts for what each stage removed (the per-stage
 counts are the corpus-level lineage a 100-TB curation run reports).
+Those counts are observed metrics of the pin and write jobs that run
+each stage, not separate count actions.
 Determinism: every stage is a pure function of content (hashes, min-id
 survivors, hash-threshold sampling), so re-running the job on the same
 input reproduces the identical corpus on any cluster size.
@@ -31,7 +33,7 @@ import json
 import os
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from datacanary_spark.functions.heuristics import FilterConfig
@@ -46,7 +48,9 @@ from datacanary_spark.plans.caching import CacheScope
 from datacanary_spark.sources.io import read_table, write_text
 
 # Canonical execution order of every doc-count lineage key a curation
-# run can record (r05, VERDICT r04 §next.8).  ``stage_lineage`` in the
+# run can record (r05, VERDICT r04 §next.8).  Each count is an observed
+# metric of the job that runs its stage (the stage's pin, or the final
+# write), so recording it adds no Spark action.  ``stage_lineage`` in the
 # summary is derived from this order: each enabled stage gets one
 # {stage, docs_in, docs_out, dropped} row whose docs_in is the previous
 # stage's docs_out, so the whole table sums consistently by
@@ -62,6 +66,22 @@ STAGE_COUNT_ORDER = (
     "after_span_dedup", "after_host_cap", "after_decontamination",
     "after_dsir", "sampled", "upsampled_rows",
 )
+
+
+def _observed_counts(spark: SparkSession, observations) -> dict:
+    """``{key: count}`` of ``(key, Observation)`` pairs. Observations
+    complete on the listener bus, so it is drained first: one still open
+    belongs to a frame no job ran (``Observation.get`` would block on it
+    forever). An empty row marks a frame AQE pruned as empty."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    counts = {}
+    for key, obs in observations:
+        if not obs._jo.future().isCompleted():
+            raise RuntimeError(f"stage count {key!r} was never observed: "
+                               f"no job ran its frame")
+        row = obs._jo.getRow()
+        counts[key] = row.getLong(0) if row.length() else 0
+    return counts
 
 
 def run_curation_job(
@@ -243,6 +263,13 @@ def run_curation_job(
         raise ValueError(f"stage_pin must be auto/persist/checkpoint, "
                          f"got {stage_pin!r}")
     t0 = time.time()
+    # Spark 4.1 serializes a session's ObservationManager with it, so a
+    # session that has observed metrics can no longer be captured by a
+    # task closure (an MLlib model keeps its training session). The
+    # stages run on a clone of the caller's session: same context, conf
+    # and catalog. Its constructor rebinds RDD.toDF; ``finally`` undoes it.
+    caller, spark = spark, SparkSession(
+        spark.sparkContext, spark._jsparkSession.cloneSession())
     scope = CacheScope()
     # Stage-boundary pin policy. `persist` keeps lineage (blocks lost
     # to executor failure recompute) but the analyzed plan embeds the
@@ -265,12 +292,33 @@ def run_curation_job(
         decontaminate_path is not None, dsir_target_path is not None,
         bool(fractions) or temperature is not None
         or bool(epoch_weights)) if on)
+    # Either pin materializes its stage in a job rooted at it, which
+    # takes the stage's observed count: a count left to a later job is
+    # lost when AQE prunes an empty join above the stage.
     if stage_pin == "checkpoint" or (stage_pin == "auto" and n_stages >= 6):
         pin = scope.checkpoint
     else:
-        pin = scope.persist
-    blocklist_count = None
-    normalize_count = None
+        def pin(df):
+            df = scope.persist(df)
+            df.write.format("noop").mode("overwrite").save()
+            return df
+    # which pin actually ran — operators need to know whether this run
+    # had lineage recovery (persist) or restart-level retry only
+    # (checkpoint); deterministic, so re-run summaries match
+    summary = {"stage_pin": "checkpoint" if pin == scope.checkpoint
+               else "persist"}
+    observations = []  # (summary key, Observation), read after the write
+
+    def observed(key, df, metric=None, pinned=True):
+        """``df`` with its row count (or ``metric``) observed as
+        ``summary[key]``; pinned unless it has one consumer and needs no
+        plan cut, when the next pin or the write counts it."""
+        obs = Observation()
+        observations.append((key, obs))
+        df = df.observe(obs, (F.count(F.lit(1)) if metric is None
+                              else metric).alias("n"))
+        return pin(df) if pinned else df
+
     try:
         if input_format == "parquet":
             pages = read_table(spark, input_path)
@@ -299,15 +347,13 @@ def run_curation_job(
             files = _chunk_files(input_path, 1, input_format)[0]
             kinds = ("conversion",) if input_format == "wet" \
                 else ("response",)
-            # pin the decoded frame: both the docs_in count and the
-            # filter stage consume it — unpersisted, each re-runs the
-            # gunzip + WARC record parse over the whole crawl
-            pages = pin(
-                pages_from_warc(spark, files, record_types=kinds,
-                                ok_only=http_ok_only))
+            pages = pages_from_warc(spark, files, record_types=kinds,
+                                    ok_only=http_ok_only)
         else:
             raise ValueError(f"unknown input_format {input_format!r} "
                              f"(expected parquet, jsonl, warc, or wet)")
+        # docs_in means the PRE-blocklist input
+        pages = observed("docs_in", pages, pinned=False)
         if blocklist is not None:
             from datacanary_spark.operators.text_analysis import (
                 filter_blocked_domains,
@@ -320,16 +366,8 @@ def run_curation_job(
             # list is inlined (literal dispatch under 256 entries).
             bl = (read_table(spark, blocklist)
                   if isinstance(blocklist, str) else list(blocklist))
-            n_in = pages.count()
-            # pin the filtered frame: three downstream consumers read it
-            # (the after_blocklist count, the filter stage, docs_in via
-            # the summary) — unpersisted, each re-runs the blocklist
-            # explode/semi-join over the full input
-            pages = pin(
-                filter_blocked_domains(pages, bl, url_col="url",
-                                       id_col="url"))
-            blocklist_count = {"docs_in": n_in,
-                               "after_blocklist": pages.count()}
+            pages = observed("after_blocklist", filter_blocked_domains(
+                pages, bl, url_col="url", id_col="url"), pinned=False)
         if block_url_patterns:
             from datacanary_spark.operators.text_analysis import (
                 filter_blocked_url_patterns,
@@ -337,13 +375,9 @@ def run_curation_job(
 
             # same run-FIRST rationale as the domain blocklist, and
             # even cheaper: a pure column predicate on url, no join —
-            # pipelines into whatever scan/filter runs next, so no
-            # persist or extra count-triggered pass is warranted
-            if blocklist_count is None:
-                blocklist_count = {"docs_in": pages.count()}
-            pages = filter_blocked_url_patterns(pages, block_url_patterns,
-                                                url_col="url")
-            blocklist_count["after_url_patterns"] = pages.count()
+            # pipelines into whatever scan/filter runs next
+            pages = observed("after_url_patterns", filter_blocked_url_patterns(
+                pages, block_url_patterns, url_col="url"), pinned=False)
         if robots_table is not None:
             from datacanary_spark.operators.robots import robots_filter
 
@@ -353,22 +387,17 @@ def run_curation_job(
             # compiled rules broadcast; the per-page longest-match is
             # expression-only and pipelines with the scan. Docs with no
             # parseable host or no robots row pass (policy can't apply).
-            if blocklist_count is None:
-                blocklist_count = {"docs_in": pages.count()}
-            pages = robots_filter(pages, read_table(spark, robots_table),
-                                  agent=robots_agent, url_col="url")
-            blocklist_count["after_robots"] = pages.count()
+            pages = observed("after_robots", robots_filter(
+                pages, read_table(spark, robots_table),
+                agent=robots_agent, url_col="url"), pinned=False)
         if normalize_unicode or fix_encoding:
             from datacanary_spark.functions.normalize import normalize_text
 
-            # persisted: the changed-count lineage aggregate and the
-            # filter stage both consume the UDF output — unpersisted,
-            # the normalizer would run twice over the full corpus
-            pages = pin(normalize_text(
+            pages = observed("normalized_docs", normalize_text(
                 pages, "text", form=normalize_unicode,
-                fix_encoding=fix_encoding))
-            normalize_count = pages.where(F.col("text_changed")).count()
-            pages = pages.drop("text_changed")
+                fix_encoding=fix_encoding),
+                metric=F.count_if(F.col("text_changed")),
+                pinned=False).drop("text_changed")
         verdicts = filter_pages(pages, broadcast_models(spark, models), cfg,
                                 extract_from_html=extract_from_html,
                                 extractor=extractor)
@@ -384,23 +413,8 @@ def run_curation_job(
                     f"column {c!r} not in the filter output "
                     f"(available: {sorted(verdicts.columns)})")
             carry.append(c)
-        kept = pin(
-            verdicts.where(F.col("keep"))
-                    .select("url", F.col("scrubbed_text").alias("text"),
-                            *carry[2:]))
-        # docs_in means the PRE-blocklist input; with a blocklist active
-        # the counts were already taken (no extra action — counting the
-        # filtered frame here would re-scan and then be overwritten)
-        summary = dict(blocklist_count) if blocklist_count is not None \
-            else {"docs_in": pages.count()}
-        # which pin actually ran — operators need to know whether this
-        # run had lineage recovery (persist) or restart-level retry
-        # only (checkpoint); deterministic, so re-run summaries match
-        summary["stage_pin"] = ("checkpoint"
-                                if pin == scope.checkpoint else "persist")
-        if normalize_count is not None:
-            summary["normalized_docs"] = normalize_count
-        summary["kept"] = kept.count()
+        kept = observed("kept", verdicts.where(F.col("keep")).select(
+            "url", F.col("scrubbed_text").alias("text"), *carry[2:]))
 
         if classifier_model:
             from datacanary_spark.plans.classifier import (
@@ -414,17 +428,14 @@ def run_curation_job(
                 # DCLM-style: keep the top fraction by score rather
                 # than a fixed probability threshold — robust to score
                 # calibration drift across corpora
-                kept = pin(
-                    classify_top_fraction(
-                        kept, clf, classifier_keep_fraction,
-                        text_col="text", tie_col="url", persist=scope)
-                    .select(*kept.columns))
+                scored = classify_top_fraction(
+                    kept, clf, classifier_keep_fraction,
+                    text_col="text", tie_col="url", persist=scope)
             else:
-                kept = pin(
-                    classify(kept, clf, text_col="text",
-                             threshold=classifier_threshold)
-                    .where(F.col("keep_pred")).select(*kept.columns))
-            summary["after_classifier"] = kept.count()
+                scored = classify(kept, clf, text_col="text",
+                                  threshold=classifier_threshold) \
+                    .where(F.col("keep_pred"))
+            kept = observed("after_classifier", scored.select(*kept.columns))
 
         if gopher_repetition:
             from datacanary_spark.functions.repetition import (
@@ -437,9 +448,8 @@ def run_curation_job(
             rep = with_repetition_stats(kept, text_col="text")
             hits = gopher_repetition_hit_exprs(rcfg)
             n_hits = sum(hits.values(), F.lit(0))
-            kept = pin(
-                rep.where(n_hits == 0).select(*kept.columns))
-            summary["after_repetition_filter"] = kept.count()
+            kept = observed("after_repetition_filter",
+                            rep.where(n_hits == 0).select(*kept.columns))
 
         if max_code_line_fraction is not None:
             from datacanary_spark.functions.readability import (
@@ -454,11 +464,9 @@ def run_curation_job(
             # explicit null guard: ~(NULL > t) is NULL and where()
             # drops NULL rows — the opposite of the survive contract
             frac = F.col("rd_code_line_fraction")
-            kept = pin(
-                rd.where(frac.isNull()
-                         | (frac <= max_code_line_fraction))
-                  .select(*kept.columns))
-            summary["after_code_filter"] = kept.count()
+            kept = observed("after_code_filter", rd.where(
+                frac.isNull() | (frac <= max_code_line_fraction))
+                .select(*kept.columns))
 
         if min_compression_ratio is not None:
             from datacanary_spark.functions.readability import (
@@ -473,12 +481,10 @@ def run_curation_job(
             ratio = make_compression_ratio_udf()(F.col("text"))
             # same null guard as the code filter: null ratio (empty
             # text) must survive, and NULL comparisons drop in where()
-            kept = pin(
-                kept.withColumn("_zratio", ratio)
-                    .where(F.col("_zratio").isNull()
-                           | (F.col("_zratio") >= min_compression_ratio))
-                    .select(*kept.columns))
-            summary["after_compression_filter"] = kept.count()
+            zr = F.col("_zratio")
+            kept = observed("after_compression_filter", kept.withColumn(
+                "_zratio", ratio).where(zr.isNull() | (
+                    zr >= min_compression_ratio)).select(*kept.columns))
 
         if badwords is not None:
             from datacanary_spark.operators.text_analysis import (
@@ -497,12 +503,11 @@ def run_curation_job(
             # from the scrub lexicon (they serve different policies).
             bw = (read_table(spark, badwords)
                   if isinstance(badwords, str) else list(badwords))
-            kept = pin(filter_badwords(
+            kept = observed("after_badwords", filter_badwords(
                 kept, bw, text_col="text", id_col="url",
                 max_hits=(None if badword_max_fraction is not None
                           else 0),
                 max_fraction=badword_max_fraction))
-            summary["after_badwords"] = kept.count()
 
         if c4_clean:
             from datacanary_spark.operators.text_analysis import (
@@ -512,14 +517,13 @@ def run_curation_job(
             # line-QUALITY cleaning before any dedup: boilerplate lines
             # removed here never enter a fingerprint or shingle set, so
             # every later stage hashes less text
-            kept = pin(c4_clean_op(
+            kept = observed("after_c4_clean", c4_clean_op(
                 kept, text_col="text",
                 min_words=c4_min_line_words,
                 require_terminal=c4_require_terminal))
-            summary["after_c4_clean"] = kept.count()
 
-        stage = pin(dedup_exact(kept, id_col="url", text_col="text"))
-        summary["after_exact_dedup"] = stage.count()
+        stage = observed("after_exact_dedup",
+                         dedup_exact(kept, id_col="url", text_col="text"))
 
         if near_dup_threshold is not None:
             from datacanary_spark.operators.dedup import near_dup_pairs
@@ -543,16 +547,15 @@ def run_curation_job(
                 flagged = cluster_survivors(
                     stage, pairs.select("id_a", "id_b"), id_col="url",
                     rank_col=F.length("text"), persist=scope)
-                stage = pin(
-                    flagged.where(F.col("is_survivor"))
-                           .drop("component", "is_survivor"))
+                survivors = flagged.where(F.col("is_survivor")) \
+                    .drop("component", "is_survivor")
             else:
                 assigned = components_of_pairs(
-                    stage, pairs.select("id_a", "id_b"), id_col="url")
-                stage = pin(
-                    assigned.where(F.col("component") == F.col("url"))
-                            .drop("component"))
-            summary["after_near_dup_clusters"] = stage.count()
+                    stage, pairs.select("id_a", "id_b"), id_col="url",
+                    scope=scope)
+                survivors = assigned.where(
+                    F.col("component") == F.col("url")).drop("component")
+            stage = observed("after_near_dup_clusters", survivors)
 
         if line_dedup:
             # (unit validated up front, incl. the c4_clean conflict)
@@ -563,9 +566,9 @@ def run_curation_job(
                              persist=scope,
                              sep=("\n\n" if line_dedup_unit == "paragraph"
                                   else "\n"))
-            stage = pin(stage.drop("text").join(ld, "url")
-                                  .where(F.length(F.trim("text")) > 0))
-            summary["after_line_dedup"] = stage.count()
+            stage = observed("after_line_dedup", stage.drop("text")
+                             .join(ld, "url")
+                             .where(F.length(F.trim("text")) > 0))
 
         if span_dedup_k is not None:
             from datacanary_spark.operators.dedup import remove_repeated_ngrams
@@ -574,9 +577,9 @@ def run_curation_job(
                                         text_col="text", k=span_dedup_k,
                                         min_count=span_min_count,
                                         hash_fn="xxhash64", persist=scope)
-            stage = pin(stage.drop("text").join(sd, "url")
-                                  .where(F.length(F.trim("text")) > 0))
-            summary["after_span_dedup"] = stage.count()
+            stage = observed("after_span_dedup", stage.drop("text")
+                             .join(sd, "url")
+                             .where(F.length(F.trim("text")) > 0))
 
         if host_cap is not None:
             from datacanary_spark.operators.corpus_stats import cap_per_group
@@ -594,11 +597,9 @@ def run_curation_job(
             # host whose crawl mixes EXAMPLE.COM / example.com. forms
             # would otherwise split into several cap groups and collect
             # a multiple of the cap
-            capped = cap_per_group(
+            stage = observed("after_host_cap", cap_per_group(
                 stage.withColumn("_host", blocklist_host_expr(F.col("url"))),
-                "_host", host_cap, "url", exempt_null_group=True).drop("_host")
-            stage = pin(capped)
-            summary["after_host_cap"] = stage.count()
+                "_host", host_cap, "url", exempt_null_group=True).drop("_host"))
 
         if decontaminate_path:
             reference = read_table(spark, decontaminate_path)
@@ -611,9 +612,8 @@ def run_curation_job(
                     decontaminate_bloom,
                 )
 
-                stage = pin(
-                    decontaminate_bloom(stage, reference, text_col="text",
-                                        persist=scope))
+                clean = decontaminate_bloom(stage, reference,
+                                            text_col="text", persist=scope)
             elif decontaminate_mode == "minhash":
                 # fuzzy tier: drops docs NEAR-duplicate to a reference
                 # item (reflowed/lightly-edited benchmark copies that
@@ -626,9 +626,9 @@ def run_curation_job(
                 # the band explode and the verify join — unpersisted,
                 # the shingle+16-hash signature pass (the mode's
                 # dominant map cost) runs twice over the full corpus
-                stage = pin(
-                    decontaminate_minhash(stage, reference, id_col="url",
-                                          text_col="text", persist=scope))
+                clean = decontaminate_minhash(stage, reference,
+                                              id_col="url", text_col="text",
+                                              persist=scope)
             elif decontaminate_mode == "ngrams":
                 # exhaustive word-n-gram overlap (GPT-3 13-gram rule):
                 # any shared 13-gram with the reference contaminates
@@ -636,26 +636,22 @@ def run_curation_job(
                     decontaminate_ngrams,
                 )
 
-                stage = pin(
-                    decontaminate_ngrams(stage, reference, id_col="url",
-                                         text_col="text"))
+                clean = decontaminate_ngrams(stage, reference,
+                                             id_col="url", text_col="text")
             else:
-                stage = pin(
-                    decontaminate(stage, reference, id_col="url",
-                                  text_col="text", mode=decontaminate_mode))
-            summary["after_decontamination"] = stage.count()
+                clean = decontaminate(stage, reference, id_col="url",
+                                      text_col="text",
+                                      mode=decontaminate_mode)
+            stage = observed("after_decontamination", clean)
 
         if dsir_target_path:
             from datacanary_spark.operators import dsir
 
             target = read_table(spark, dsir_target_path)
             model = dsir.train_dsir(target, stage, text_col="text")
-            stage = pin(
-                dsir.dsir_select(stage, model, dsir_keep_fraction,
-                                 text_col="text", tie_col="url",
-                                 persist=scope)
-                    .drop("dsir_weight"))
-            summary["after_dsir"] = stage.count()
+            stage = observed("after_dsir", dsir.dsir_select(
+                stage, model, dsir_keep_fraction, text_col="text",
+                tie_col="url", persist=scope).drop("dsir_weight"))
 
         if temperature is not None:
             from datacanary_spark.operators.corpus_stats import (
@@ -668,8 +664,8 @@ def run_curation_job(
             summary["temperature_fractions"] = {
                 k: round(v, 6) for k, v in sorted(fractions.items())}
         if fractions:
-            stage = hash_stratified_sample(stage, strata_col, fractions, key_col)
-            summary["sampled"] = stage.count()
+            stage = observed("sampled", hash_stratified_sample(
+                stage, strata_col, fractions, key_col), pinned=False)
 
         if epoch_weights:
             from datacanary_spark.operators.corpus_stats import epoch_upsample
@@ -677,27 +673,29 @@ def run_curation_job(
             # fractional-epoch replication (weights may exceed 1): the
             # output carries an `epoch` column so packing/sharding can
             # interleave replicas instead of emitting them back-to-back
-            stage = epoch_upsample(stage, strata_col, epoch_weights, key_col)
+            stage = observed("upsampled_rows", epoch_upsample(
+                stage, strata_col, epoch_weights, key_col), pinned=False)
             carry.append("epoch")
-            summary["upsampled_rows"] = stage.count()
 
-        corpus_dir = os.path.join(output_path, "corpus")
         # pin the output schema: the line-dedup join reorders columns, and
         # positional consumers must see one layout regardless of flags
-        stage.select(*carry).write.mode("overwrite").parquet(corpus_dir)
+        corpus = stage.select(*carry)
+        corpus.write.mode("overwrite").parquet(
+            os.path.join(output_path, "corpus"))
+        # one aggregate over the pinned last stage, no output read-back
+        by_lang = {r[strata_col]: r["n"] for r in corpus.groupBy(strata_col)
+                   .agg(F.count(F.lit(1)).alias("n")).collect()}
     finally:
         # release every pinned stage even when a stage throws — a
         # long-lived session must not accumulate cached blocks
         scope.unpersist_all()
+        SparkSession(caller.sparkContext, caller._jsparkSession)
 
-    final = spark.read.parquet(corpus_dir)
-    summary["final_docs"] = final.count()
-    summary["by_lang"] = {
-        r[strata_col]: r["n"]
-        for r in final.groupBy(strata_col)
-                      .agg(F.count(F.lit(1)).alias("n")).collect()}
-    # per-stage accounting table, derived from the counts each stage
-    # already took (no extra Spark action): docs_in chains from the
+    summary.update(_observed_counts(spark, observations))
+    summary["final_docs"] = sum(by_lang.values())
+    summary["by_lang"] = by_lang
+    # per-stage accounting table, derived from the counts each stage's
+    # own jobs observed (no extra Spark action): docs_in chains from the
     # previous stage's docs_out, so sums are consistent by construction
     lineage = []
     prev = summary["docs_in"]

@@ -13,22 +13,11 @@ and the PASSED-iff-100% verdict match the reference line formats.
 
 from __future__ import annotations
 
-import re
 from datetime import datetime, timezone
 from typing import Any
 
 from datacanary_spark.analysis.insights import get_data_insights
 from datacanary_spark.analysis.summary import calculate_summary, get_health_score
-
-
-def report_filename(dataset_name: str, now: datetime | None = None) -> str:
-    """Sanitized report filename (report_generator.py:30-49)."""
-    import os
-
-    base = os.path.splitext(os.path.basename(dataset_name))[0]
-    base = re.sub(r"[^\w\-_]", "_", base)
-    stamp = (now or datetime.now()).strftime("%Y%m%d_%H%M%S")
-    return f"datacanary_report_{base}_{stamp}.txt"
 
 
 def generate_text_report(dataset_name: str,

@@ -73,14 +73,3 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("rule_hit_histogram", T.MapType(T.StringType(), T.LongType()), False),
     ]
 )
-
-# ---- long-format column profile --------------------------------------------
-
-PROFILE_SCHEMA = T.StructType(
-    [
-        T.StructField("column", T.StringType(), False),
-        T.StructField("type", T.StringType(), False),
-        T.StructField("stat", T.StringType(), False),
-        T.StructField("value", T.StringType(), True),  # stringified; typed view via stats dict
-    ]
-)

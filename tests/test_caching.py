@@ -102,18 +102,31 @@ def test_embedding_near_dup_with_scope_leaves_no_blocks(spark, emb_df):
 
 def test_curate_run_leaves_no_cached_blocks(spark, tmp_path):
     """The full curation pipeline (filter → dedup → lines → host-cap)
-    must release every pinned stage by the time it returns."""
+    must release every pinned stage by the time it returns — with and
+    without the near-dup stage, whose connected-components result is a
+    localCheckpoint (and which tips the auto pin to checkpoints)."""
     from datacanary_spark.plans.curate import run_curation_job
     from datacanary_spark.sources.fixtures import write_pages_parquet
 
     pages = str(tmp_path / "pages")
     write_pages_parquet(pages, n_docs=120, seed=11)
+    # near copies, so the near-dup stage has clusters to resolve
+    src = spark.read.parquet(pages)
+    copies = (src.orderBy("url").limit(20)
+              .withColumn("url", F.concat("url", F.lit("~copy")))
+              .withColumn("text", F.concat(
+                  "text", F.lit(" and a tiny trailing remark"))))
+    near = str(tmp_path / "near")
+    src.unionByName(copies).write.parquet(near)
     baseline = _n_cached_rdds(spark)
-    out = str(tmp_path / "curated")
-    summary = run_curation_job(spark, pages, out, host_cap=5)
-    assert summary["final_docs"] > 0
-    assert os.path.isdir(os.path.join(out, "corpus"))
-    assert _n_cached_rdds(spark) == baseline
+    for name, inp, kw in (("curated", pages, {}),
+                          ("curated_nd", near, {"near_dup_threshold": 0.8})):
+        out = str(tmp_path / name)
+        summary = run_curation_job(spark, inp, out, host_cap=5, **kw)
+        assert summary["final_docs"] > 0
+        assert os.path.isdir(os.path.join(out, "corpus"))
+        assert _n_cached_rdds(spark) == baseline
+    assert summary["after_near_dup_clusters"] < summary["after_exact_dedup"]
 
 
 def test_cache_scope_checkpoint_truncates_and_releases(spark):

@@ -56,6 +56,33 @@ def test_char_shingles_matches_python(spark, docs_df):
         assert set(r["sh"]) == py_shingles(DOCS[r["doc_id"]][1]), r["doc_id"]
 
 
+def _expr_nodes(e):
+    yield e
+    children = e.children()
+    for i in range(children.size()):
+        yield from _expr_nodes(children.apply(i))
+
+
+def test_char_shingles_normalizes_outside_lambdas(spark, docs_df):
+    """Lambda bodies are outside subexpression elimination: a whitespace
+    regex or case-fold inside the shingle lambda re-normalizes the whole
+    text at every shingle position, O(length²) per doc."""
+    plan = docs_df.select(dd.char_shingles(F.col("text")).alias("sh")) \
+        ._jdf.queryExecution().optimizedPlan()
+    exprs = plan.expressions()
+    nodes = [n for i in range(exprs.size())
+             for n in _expr_nodes(exprs.apply(i))]
+    lambdas = [n for n in nodes
+               if n.getClass().getSimpleName() == "LambdaFunction"]
+    assert lambdas
+    names = {n.getClass().getSimpleName() for n in nodes}
+    assert {"RegExpReplace", "Lower"} <= names
+    for lam in lambdas:
+        inner = {n.getClass().getSimpleName()
+                 for n in _expr_nodes(lam.function())}
+        assert not inner & {"RegExpReplace", "Lower"}, lam.toString()
+
+
 def test_minhash_signature_matches_python(spark, docs_df):
     rows = docs_df.where(F.col("doc_id").isin(0, 1, 2)).select(
         "doc_id",
