@@ -517,8 +517,7 @@ def cmd_ann_index(args) -> int:
             # codebooks must be FITTED on residuals too (fitting them
             # on raw vectors wastes the whole code budget re-describing
             # the coarse structure the centroids already encode)
-            res = F.expr(sim._residual_bound_sql(args.vec_col, cents,
-                                                 "r"))
+            res = sim.ivf_residual_expr(F.col(args.vec_col), cents)
             pq_train_src = (df.where(F.size(F.col(args.vec_col))
                                      == args.dim)
                               .select(res.alias(args.vec_col)))

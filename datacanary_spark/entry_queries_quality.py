@@ -17,20 +17,16 @@ DOC_COLUMNS = ["doc_id", "text", "lang", "source", "n_chars"]
 NUMERIC_COLUMNS = ["doc_id", "n_chars"]
 
 _NULL_PCT = ("round(avg(CASE WHEN {c} IS NULL THEN 1.0 ELSE 0.0 END) * 100, 2)")
-
-# One single-pass profile of `documents` feeds five queries here; cache
-# it per sf_dir (pure function of the input data) so the driver's
-# query-by-query contract doesn't recompute the same aggregate.
-_PROFILE_CACHE: dict[str, dict] = {}
+_UNIQ_PCT = "round(count(DISTINCT {c}) * 100.0 / count(*), 2)"
 
 
 def _doc_profile(spark, sf_dir):
-    if sf_dir not in _PROFILE_CACHE:
-        from datacanary_spark.operators.profiler import analyse_dataframe
+    """The single-pass profile of ``documents`` that feeds five queries
+    here, computed from the parquet on every call: a memoized result
+    would make every warm run time a dict lookup."""
+    from datacanary_spark.operators.profiler import analyse_dataframe
 
-        _PROFILE_CACHE[sf_dir] = analyse_dataframe(_t(spark, sf_dir, "documents"))
-    return _PROFILE_CACHE[sf_dir]
-_UNIQ_PCT = "round(count(DISTINCT {c}) * 100.0 / count(*), 2)"
+    return analyse_dataframe(_t(spark, sf_dir, "documents"))
 
 
 def _verdict_selects() -> list[str]:

@@ -13,19 +13,19 @@ Two tiers, mirroring how a training-data pipeline scales ANN:
   bucket sizes concentrate around n/2^n_bits, and AQE's skew handling
   splits hot buckets. Recall is tunable via n_bits/n_tables.
 
-Bucket/cell ASSIGNMENT has two interchangeable forms, dispatched by the
-``assignment`` parameter (default ``"auto"``): at test/oracle dims the
-planes/centroids are plan literals (pure Column expressions, DuckDB-
-expressible); at real embedding dims (768+) they are broadcast numpy
-matrices applied by one Arrow pandas UDF per frame — plan size flat in
-dim. See LITERAL_ASSIGN_BUDGET.
+IVF cells, PQ codes and IVFPQ (raw or residual) share those contracts.
+Every plane/centroid/codebook matrix is applied one of two ways, picked
+by ``assignment`` (default ``"auto"``; LITERAL_ASSIGN_BUDGET): Column
+lambdas over ONE literal node per matrix (``_lit_matrix``; a value read
+twice is bound once per row, ``_bind``) — pure JVM codegen, DuckDB-
+expressible — or, at real embedding dims (768+), the matrices
+broadcast to ONE Arrow pandas UDF factory (``_matrix_udf``) over small
+numpy kernels, plan size flat in dim.
 
-All arithmetic is element-wise double-precision with sequential
-left-to-right accumulation, which both Spark's ``aggregate`` and
-DuckDB's ``list_dot_product`` implement — so oracle results match
-exactly. No Python in any hot path: scoring is pure Column expressions
-(JVM codegen); at very high dims you'd swap `cosine_expr` for a numpy
-pandas UDF in one place.
+All literal arithmetic is element-wise double-precision with
+sequential left-to-right accumulation, which both Spark's ``aggregate``
+and DuckDB's ``list_dot_product`` implement — so oracle results match
+exactly (derived literals come from the same fold, ``_seq_dot``).
 """
 
 from __future__ import annotations
@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+
+from datacanary_spark.plans.partitioning import spread_to_parallelism as _spread
 
 PLANE_SEED = 20240816
 
@@ -63,6 +65,24 @@ def _resolve_assignment(assignment: str, n_literals: int) -> str:
     return assignment
 
 
+def _quantizers(dim: int, assignment: str, seed: int,
+                n_centroids: int | None = None, centroids=None,
+                n_sub: int | None = None, n_codes: int | None = None,
+                codebooks=None):
+    """``(centroids, codebooks, mode)``: each the given array or the
+    seeded default (None without ``n_centroids``/``n_sub``), and
+    ``assignment`` resolved on the larger literal matrix."""
+    cents = books = None
+    if n_centroids is not None:
+        cents = (ivf_centroids(dim, n_centroids, seed) if centroids is None
+                 else np.asarray(centroids, dtype=np.float64))
+    if n_sub is not None:
+        books = (pq_codebooks(dim, n_sub, n_codes, seed) if codebooks is None
+                 else np.asarray(codebooks, dtype=np.float64))
+    n_literals = max(a.size for a in (cents, books) if a is not None)
+    return cents, books, _resolve_assignment(assignment, n_literals)
+
+
 def _vec_matrix(vecs: pd.Series, dim: int) -> tuple[np.ndarray, np.ndarray]:
     """((n, dim) float64 matrix, (n,) valid mask).
 
@@ -82,6 +102,83 @@ def _vec_matrix(vecs: pd.Series, dim: int) -> tuple[np.ndarray, np.ndarray]:
     return out, valid
 
 
+def _matrix_udf(df: DataFrame, return_type: str, width: int, kernel,
+                *arrays):
+    """The ONE Arrow pandas UDF factory behind every ``"udf"`` dispatch:
+    ``arrays`` broadcast once as float64 (one ArrowEvalPython node, flat
+    in dim); per batch ``kernel(M, ok, *arrays, *extra) -> (out, ok)``
+    over ``_vec_matrix(first arg, width)`` and further args (cell ids,
+    NaN for null). Rows with ``ok`` False come back null."""
+    bc = df.sparkSession.sparkContext.broadcast(
+        [np.asarray(a, dtype=np.float64) for a in arrays])
+
+    @pandas_udf(return_type)
+    def matrix_udf(*cols: pd.Series) -> pd.Series:
+        M, ok = _vec_matrix(cols[0], width)
+        extra = [c.to_numpy(dtype="float64", na_value=np.nan)
+                 for c in cols[1:]]
+        out, ok = kernel(M, ok, *bc.value, *extra)
+        if out.ndim == 1:
+            return pd.Series(out, dtype="Int32").mask(~ok)
+        return pd.Series([row if v else None for row, v in zip(out, ok)])
+
+    return matrix_udf
+
+
+def _srp_kernel(M, ok, P):
+    """All (n, T) SRP buckets in one einsum; invalid (zero) rows keep
+    bucket 0 in every table, the literal expression's null semantics."""
+    weights = np.int64(1) << np.arange(P.shape[1], dtype=np.int64)
+    bkts = ((np.einsum("nd,tbd->ntb", M, P) > 0) @ weights).astype(np.int32)
+    return bkts, np.ones(len(M), dtype=bool)
+
+
+def _cell_kernel(M, ok, C):
+    """Nearest cell; np.argmax's FIRST max is the literal tie-break."""
+    return np.argmax(M @ C.T, axis=1).astype(np.int32), ok
+
+
+def _probe_kernel(M, ok, C, n_probe: int):
+    """The n_probe nearest cells; stable argsort on -dot gives (dot
+    desc, id asc), the literal form's exact tie-break."""
+    order = np.argsort(-(M @ C.T), axis=1, kind="stable")
+    return order[:, :n_probe].astype(np.int32), ok
+
+
+def _cell_rows(ok, cents, cells):
+    """Centroid row per row; a null or out-of-range cell fails ok."""
+    ok = ok & (cells >= 0) & (cells < len(cents))
+    return np.where(ok, cells, 0).astype(np.intp), ok
+
+
+def _encode_kernel(M, ok, cb, cents=None, cells=None):
+    """PQ codes: per-subspace argmin of ``||c||^2 - 2 s·c`` (first min);
+    residual codes over ``M - cents[cell]`` given ``cents``."""
+    if cents is not None:
+        idx, ok = _cell_rows(ok, cents, cells)
+        M = M - cents[idx]
+    n_sub, _, sub = cb.shape
+    out = np.empty((len(M), n_sub), dtype=np.int32)
+    for m in range(n_sub):
+        S = M[:, m * sub:(m + 1) * sub]
+        dists = (cb[m] ** 2).sum(axis=1)[None, :] - 2.0 * (S @ cb[m].T)
+        out[:, m] = np.argmin(dists, axis=1)
+    return out, ok
+
+
+def _decode_kernel(M, ok, cb, cents=None, cells=None):
+    """Codes → chosen book rows (``+ cents[cell]`` given ``cents``), with
+    the literal geometry guard (an out-of-range or null code would
+    raise or, negative, silently WRAP via numpy indexing)."""
+    n_sub, n_codes, _ = cb.shape
+    ok = ok & np.all((M >= 0) & (M < n_codes), axis=1)
+    if cents is not None:
+        idx, ok = _cell_rows(ok, cents, cells)
+    codes = np.where(ok[:, None], M, 0).astype(np.intp)
+    out = np.concatenate([cb[m][codes[:, m]] for m in range(n_sub)], axis=1)
+    return (out if cents is None else out + cents[idx]), ok
+
+
 def dot_expr(a: Column, b: Column) -> Column:
     """Sequential double-precision dot product of two float arrays."""
     prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
@@ -96,15 +193,26 @@ def cosine_expr(a: Column, b: Column) -> Column:
     return F.try_divide(dot_expr(a, b), norm_expr(a) * norm_expr(b))
 
 
-from datacanary_spark.plans.partitioning import spread_to_parallelism as _spread
+def _bind(value: Column, body) -> Column:
+    """``body(value)`` with ``value`` evaluated ONCE per row — the
+    one-element-transform trick: higher-order subtrees get no
+    subexpression elimination (see winnow_fingerprints)."""
+    return F.element_at(F.transform(F.array(value), body), 1)
 
 
-def _topk(scored: DataFrame, query_id_col: str, k: int) -> DataFrame:
-    """Shared top-k tail of the three neighbor operators: per-query
-    rank window with the deterministic tie-break (score desc, neighbor
-    id asc) and the 6dp score rounding. ONE definition so a tie-break
-    or rounding change cannot silently diverge the operators' output
-    contracts."""
+def _topk(joined: DataFrame, query_id_col: str, id_col: str, k: int,
+          vec: str = "_pk.recon", cnrm: str = "_pk.cnrm") -> DataFrame:
+    """Shared scoring + top-k tail of the neighbor operators: cosine of
+    the corpus vector ``vec`` (norm ``cnrm``; default: the ADC packed
+    reconstruction, see ``_pack_recon``) against the joined query
+    (``_qvec``, ``_qnrm``), then a per-query rank window with the
+    deterministic tie-break (score desc, neighbor id asc) and the 6dp
+    score rounding. ONE definition so a tie-break or rounding change
+    cannot silently diverge the operators' output contracts."""
+    scored = joined.select(
+        F.col(query_id_col), F.col(id_col).alias("neighbor_id"),
+        F.try_divide(dot_expr(F.col(vec), F.col("_qvec")),
+                     F.col(cnrm) * F.col("_qnrm")).alias("score"))
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("score").desc(), F.col("neighbor_id").asc())
     return (scored.withColumn("rank", F.row_number().over(w))
@@ -133,20 +241,12 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     # stage evaluates 3 aggregate dot products per (corpus, query) pair;
     # precomputing |v| per vector leaves 1 — bit-identical results,
     # measured ~3× on the near-dup twin of this pattern.
-    q = queries.where(F.col(vec_col).isNotNull()) \
-               .select(F.col(query_id_col),
-                       F.col(vec_col).alias("_qvec"),
-                       norm_expr(F.col(vec_col)).alias("_qnrm"))
+    q = _query_frame(queries, None, vec_col, query_id_col)
     c = _spread(corpus.where(F.col(vec_col).isNotNull())
                       .select(F.col(id_col), F.col(vec_col),
                               norm_expr(F.col(vec_col)).alias("_cnrm")))
-    scored = c.join(F.broadcast(q)).select(
-        F.col(query_id_col),
-        F.col(id_col).alias("neighbor_id"),
-        F.try_divide(dot_expr(F.col(vec_col), F.col("_qvec")),
-                     F.col("_cnrm") * F.col("_qnrm")).alias("score"),
-    )
-    return _topk(scored, query_id_col, k)
+    return _topk(c.join(F.broadcast(q)), query_id_col, id_col, k, vec_col,
+                 "_cnrm")
 
 
 def random_planes(dim: int, n_bits: int, table: int = 0,
@@ -164,40 +264,12 @@ def srp_bucket_expr(vec: Column, planes: np.ndarray) -> Column:
     value is identical to the old per-plane chained sum, including
     the null-vector → bucket 0 contract (null dot fails the > 0 test
     and contributes 0)."""
-    weights = F.expr(
-        "array(" + ",".join(str(1 << j) for j in range(len(planes))) + ")")
+    weights = F.array(*[F.lit(1 << j) for j in range(len(planes))])
     terms = F.zip_with(
         _lit_matrix(planes), weights,
         lambda p, w: F.when(dot_expr(vec, p) > 0, w).otherwise(F.lit(0)))
     return F.aggregate(terms, F.lit(0),
                        lambda acc, v: acc + v).cast("int")
-
-
-def make_srp_buckets_udf(df: DataFrame, dim: int, n_bits: int,
-                         n_tables: int, seed: int = PLANE_SEED):
-    """Arrow pandas UDF computing all per-table SRP buckets at once.
-
-    The (n_tables, n_bits, dim) plane tensor is broadcast ONCE (a few
-    hundred KB even at dim 1536) and each Arrow batch does one einsum —
-    the plan carries a single ArrowEvalPython node whose size does not
-    grow with dim. Null vectors get bucket 0 in every table, matching
-    the literal expression's null semantics.
-    """
-    planes = np.stack([random_planes(dim, n_bits, t, seed)
-                       for t in range(n_tables)])  # (T, B, D)
-    bc = df.sparkSession.sparkContext.broadcast(planes)
-
-    @pandas_udf("array<int>")
-    def srp_buckets(vecs: pd.Series) -> pd.Series:
-        P = bc.value
-        n_b = P.shape[1]
-        M, _ = _vec_matrix(vecs, P.shape[2])  # invalid rows → bucket 0
-        dots = np.einsum("nd,tbd->ntb", M, P)          # (n, T, B)
-        weights = (np.int64(1) << np.arange(n_b, dtype=np.int64))
-        bkts = ((dots > 0) @ weights).astype(np.int32)  # (n, T)
-        return pd.Series(list(bkts))
-
-    return srp_buckets
 
 
 def with_lsh_buckets(df: DataFrame, dim: int, vec_col: str = "embedding",
@@ -214,21 +286,16 @@ def with_lsh_buckets(df: DataFrame, dim: int, vec_col: str = "embedding",
     see the budget constant's comment for the dispatch rationale.
     """
     mode = _resolve_assignment(assignment, dim * n_bits * n_tables)
+    planes = [random_planes(dim, n_bits, t, seed) for t in range(n_tables)]
     if mode == "udf":
-        buckets = make_srp_buckets_udf(df, dim, n_bits, n_tables, seed)
-        return (df.withColumn("_bkts", buckets(F.col(vec_col)))
-                  .select("*", F.posexplode("_bkts").alias("table", "bucket"))
-                  .drop("_bkts"))
-    tables = F.array(*[
-        F.struct(F.lit(t).alias("table"),
-                 srp_bucket_expr(F.col(vec_col),
-                                 random_planes(dim, n_bits, t, seed)).alias("bucket"))
-        for t in range(n_tables)
-    ])
-    return (df.withColumn("_tb", F.explode(tables))
-              .withColumn("table", F.col("_tb.table"))
-              .withColumn("bucket", F.col("_tb.bucket"))
-              .drop("_tb"))
+        buckets = _matrix_udf(df, "array<int>", dim, _srp_kernel,
+                              np.stack(planes))(F.col(vec_col))
+    else:
+        buckets = F.array(*[srp_bucket_expr(F.col(vec_col), p)
+                            for p in planes])
+    return (df.withColumn("_bkts", buckets)
+              .select("*", F.posexplode("_bkts").alias("table", "bucket"))
+              .drop("_bkts"))
 
 
 def ann_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
@@ -254,10 +321,7 @@ def ann_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
     c_base = corpus.where(F.col(vec_col).isNotNull()) \
                    .select(F.col(id_col), F.col(vec_col),
                            norm_expr(F.col(vec_col)).alias("_cnrm"))
-    q_base = queries.where(F.col(vec_col).isNotNull()) \
-                    .select(F.col(query_id_col),
-                            F.col(vec_col).alias("_qvec"),
-                            norm_expr(F.col(vec_col)).alias("_qnrm"))
+    q_base = _query_frame(queries, None, vec_col, query_id_col)
     cb = with_lsh_buckets(c_base.select(id_col, vec_col), dim, vec_col,
                           n_bits, n_tables, seed, assignment) \
         .select("table", "bucket", id_col)
@@ -267,16 +331,12 @@ def ann_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
     cand = (cb.join(qb, ["table", "bucket"])
               .select(query_id_col, F.col(id_col).alias("neighbor_id"))
               .dropDuplicates())
-    scored = (cand
+    joined = (cand
               .join(c_base.select(F.col(id_col).alias("neighbor_id"),
                                   F.col(vec_col), F.col("_cnrm")),
                     "neighbor_id")
-              .join(F.broadcast(q_base), query_id_col)
-              .select(query_id_col, "neighbor_id",
-                      F.try_divide(dot_expr(F.col(vec_col), F.col("_qvec")),
-                                   F.col("_cnrm") * F.col("_qnrm"))
-                      .alias("score")))
-    return _topk(scored, query_id_col, k)
+              .join(F.broadcast(q_base), query_id_col))
+    return _topk(joined, query_id_col, "neighbor_id", k, vec_col, "_cnrm")
 
 
 IVF_SEED_TAG = 7777  # distinguishes IVF centroids from SRP planes
@@ -295,6 +355,24 @@ def ivf_centroids(dim: int, n_centroids: int,
     c = np.random.default_rng((seed, IVF_SEED_TAG)).standard_normal(
         (n_centroids, dim))
     return c / np.linalg.norm(c, axis=1, keepdims=True)
+
+
+def _train_sample(data: DataFrame, sample_fraction: float | None,
+                  salt: str) -> DataFrame:
+    """The deterministic hash sample of the ``_v`` training vectors
+    (all of them when ``sample_fraction`` is None)."""
+    if sample_fraction is None:
+        return data
+    # the shared sampling helpers: _hex_threshold clamps the 1.0
+    # nine-hex-digit edge case and validates range; _bucket_expr is
+    # the single definition of the salt:key bucket
+    from datacanary_spark.operators.corpus_stats import (
+        _bucket_expr,
+        _hex_threshold,
+    )
+
+    return data.where(_bucket_expr(F.col("_v").cast("string"), salt)
+                      < F.lit(_hex_threshold(sample_fraction)))
 
 
 def train_ivf_centroids(df: DataFrame, vec_col: str = "embedding",
@@ -320,18 +398,7 @@ def train_ivf_centroids(df: DataFrame, vec_col: str = "embedding",
 
     data = (df.where(F.col(vec_col).isNotNull())  # null features crash fit
               .select(F.col(vec_col).cast("array<double>").alias("_v")))
-    if sample_fraction is not None:
-        # the shared sampling helpers: _hex_threshold clamps the 1.0
-        # nine-hex-digit edge case and validates range; _bucket_expr is
-        # the single definition of the salt:key bucket
-        from datacanary_spark.operators.corpus_stats import (
-            _bucket_expr,
-            _hex_threshold,
-        )
-
-        data = data.where(
-            _bucket_expr(F.col("_v").cast("string"), "ivf-train")
-            < F.lit(_hex_threshold(sample_fraction)))
+    data = _train_sample(data, sample_fraction, "ivf-train")
     data = data.select(array_to_vector(F.col("_v")).alias("features"))
     model = KMeans(k=n_centroids, seed=seed, maxIter=max_iter).fit(data)
     c = np.asarray(model.clusterCenters(), dtype=np.float64)
@@ -339,11 +406,23 @@ def train_ivf_centroids(df: DataFrame, vec_col: str = "embedding",
     return c / np.where(norms == 0, 1.0, norms)
 
 
+def _sql_f(x: float) -> str:
+    """A Spark-SQL DOUBLE literal: ``repr`` round-trips the exact bits
+    and the ``D`` suffix stops ANSI mode from parsing it as DECIMAL."""
+    return f"{float(x)!r}D"
+
+
+def _sql_vec(values) -> str:
+    return "array(" + ",".join(_sql_f(x) for x in values) + ")"
+
+
 def _lit_matrix(matrix) -> Column:
-    """A literal ``array<array<double>>`` built as ONE py4j call
-    (``F.expr`` over the SQL text — the values parse JVM-side in ms;
-    ``F.lit(list)`` would issue a py4j round trip per SCALAR)."""
-    return F.expr(_sql_vec2d(matrix))
+    """A literal ``array<array<double>>`` (row-indexed with element_at)
+    built as ONE py4j call (``F.expr`` over the SQL text — the values
+    parse JVM-side in ms; ``F.lit(list)`` would issue a py4j round trip
+    per SCALAR). With ``_lit_dvec``, the module's one literal builder."""
+    return F.expr("array(" + ",".join(_sql_vec(row) for row in matrix)
+                  + ")")
 
 
 def _lit_dvec(values) -> Column:
@@ -373,8 +452,7 @@ def ivf_cell_expr(vec: Column, centroids: np.ndarray) -> Column:
     def pick(dots: Column) -> Column:
         return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
 
-    return F.element_at(
-        F.transform(F.array(_centroid_dots(vec, centroids)), pick), 1)
+    return _bind(_centroid_dots(vec, centroids), pick)
 
 
 def ivf_probe_cells_expr(vec: Column, centroids: np.ndarray,
@@ -382,54 +460,41 @@ def ivf_probe_cells_expr(vec: Column, centroids: np.ndarray,
     """The ``n_probe`` nearest cells for a query vector, as array<int>
     (ordered by dot desc, ties → smallest id — matches ivf_cell_expr)."""
     dots = _centroid_dots(vec, centroids)
-    ranked = F.array_sort(F.zip_with(
-        dots,
-        F.sequence(F.lit(0), F.lit(len(centroids) - 1)),
-        lambda d, i: F.struct((-d).alias("nd"), i.alias("i"))))
+    ranked = F.array_sort(F.transform(
+        dots, lambda d, i: F.struct((-d).alias("nd"), i.alias("i"))))
     return F.transform(F.slice(ranked, 1, n_probe), lambda s: s["i"].cast("int"))
 
 
-def make_ivf_cell_udf(df: DataFrame, centroids: np.ndarray):
-    """Arrow pandas UDF for nearest-centroid cell assignment — the
-    high-dim twin of ``ivf_cell_expr`` (broadcast centroid matrix, one
-    matmul + argmax per Arrow batch; np.argmax returns the FIRST max,
-    matching the literal expression's smallest-id tie-break). Null
-    vectors → null cell, matching the literal path (null dots → null
-    argmax)."""
-    bc = df.sparkSession.sparkContext.broadcast(
-        np.asarray(centroids, dtype=np.float64))
-
-    @pandas_udf("int")
-    def ivf_cell(vecs: pd.Series) -> pd.Series:
-        C = bc.value
-        M, valid = _vec_matrix(vecs, C.shape[1])
-        cells = np.argmax(M @ C.T, axis=1).astype("int32")
-        out = pd.Series(cells, index=vecs.index, dtype="Int32")
-        out[~valid] = None  # null OR ragged → null cell (literal parity)
-        return out
-
-    return ivf_cell
+def _cell_col(df: DataFrame, vec_col: str, cents: np.ndarray,
+              mode: str) -> Column:
+    """Nearest-centroid cell of ``vec_col`` in either dispatch mode
+    (null/ragged vector → null cell in both)."""
+    if mode == "udf":
+        return _matrix_udf(df, "int", cents.shape[1], _cell_kernel,
+                           cents)(F.col(vec_col))
+    return ivf_cell_expr(F.col(vec_col), cents)
 
 
-def make_ivf_probe_udf(df: DataFrame, centroids: np.ndarray, n_probe: int):
-    """Arrow pandas UDF for the n_probe nearest cells of each query —
-    the high-dim twin of ``ivf_probe_cells_expr``. Stable argsort on
-    -dot gives (dot desc, id asc) ordering, the literal form's exact
-    tie-break. Null query vectors → null (no probe cells: a query with
-    no vector matches nothing after the explode)."""
-    bc = df.sparkSession.sparkContext.broadcast(
-        np.asarray(centroids, dtype=np.float64))
+def _residual_bound(vec: Column, centroids: np.ndarray, body) -> Column:
+    """``body(ctr, r)`` with the cell ``cl`` and the residual ``r = x -
+    centroid[cl]`` each bound ONCE per row (``ctr`` is the centroid
+    row ``centroid[cl]``): project-collapse would otherwise re-evaluate
+    the 16-dot assignment and the dim-wide residual per
+    subspace-distance term."""
+    ctrs = _lit_matrix(centroids)
 
-    @pandas_udf("array<int>")
-    def ivf_probe(vecs: pd.Series) -> pd.Series:
-        C = bc.value
-        M, valid = _vec_matrix(vecs, C.shape[1])
-        order = np.argsort(-(M @ C.T), axis=1, kind="stable")
-        probes = order[:, :n_probe].astype("int32")
-        return pd.Series([probes[i] if valid[i] else None
-                          for i in range(len(vecs))], index=vecs.index)
+    def with_cell(cl: Column) -> Column:
+        ctr = F.element_at(ctrs, cl + 1)
+        res = F.zip_with(vec, ctr,
+                         lambda x, y: x.cast("double") - y.cast("double"))
+        return _bind(res, lambda r: body(ctr, r))
 
-    return ivf_probe
+    return _bind(ivf_cell_expr(vec, centroids), with_cell)
+
+
+def ivf_residual_expr(vec: Column, centroids: np.ndarray) -> Column:
+    """The residual ``x - centroid[cell]``: residual codebooks' input."""
+    return _residual_bound(vec, centroids, lambda ctr, r: r)
 
 
 def ivf_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
@@ -448,9 +513,8 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
     ``brute_force_topk``; recall < 1 is the trade, tunable via
     n_centroids/n_probe (or better centroids — see ``ivf_centroids``).
     """
-    cents = ivf_centroids(dim, n_centroids, seed) if centroids is None \
-        else centroids
-    mode = _resolve_assignment(assignment, dim * len(cents))
+    cents, _, mode = _quantizers(dim, assignment, seed, n_centroids,
+                                 centroids)
     # spread BEFORE the norm/cell projections (r06): the per-row
     # centroid dots + norm fold fuse into the scan stage, and a
     # single-row-group corpus file would serialize them onto one core
@@ -458,32 +522,11 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
     c = _spread(corpus.select(F.col(id_col), F.col(vec_col)))
     c = c.select(F.col(id_col), F.col(vec_col),
                  norm_expr(F.col(vec_col)).alias("_cnrm"))
-    q = queries.select(F.col(query_id_col), F.col(vec_col).alias("_qvec"),
-                       norm_expr(F.col(vec_col)).alias("_qnrm"))
-    # a null OR wrong-length query vector has no neighbors in EITHER
-    # dispatch mode: the probe UDF emits no cells for both (explode
-    # drops the row), while the literal probe expression would emit
-    # n_probe degenerate cells (null dots for a null vector; a
-    # truncated zip_with for a ragged one) and k null-score rows —
-    # filter up front so "auto" cannot change the result set with dim
-    # (the literal==udf equivalence contract; r05 extends the r04 null
-    # guard to ragged vectors)
-    q = q.where(F.size(F.col("_qvec")) == dim)
-    if mode == "udf":
-        cell_udf = make_ivf_cell_udf(c, cents)
-        probe_udf = make_ivf_probe_udf(q, cents, n_probe)
-        c = c.withColumn("cell", cell_udf(F.col(vec_col)))
-        q = q.withColumn("cell", F.explode(probe_udf(F.col("_qvec"))))
-    else:
-        c = c.withColumn("cell", ivf_cell_expr(F.col(vec_col), cents))
-        q = q.withColumn("cell", F.explode(
-            ivf_probe_cells_expr(F.col("_qvec"), cents, n_probe)))
-    scored = (c.join(q, "cell")
-               .select(query_id_col, F.col(id_col).alias("neighbor_id"),
-                       F.try_divide(dot_expr(F.col(vec_col), F.col("_qvec")),
-                                    F.col("_cnrm") * F.col("_qnrm"))
-                       .alias("score")))
-    return _topk(scored, query_id_col, k)
+    c = c.withColumn("cell", _cell_col(c, vec_col, cents, mode))
+    q = _probe_explode(_query_frame(queries, dim, vec_col, query_id_col),
+                       cents, n_probe, mode)
+    return _topk(c.join(q, "cell"), query_id_col, id_col, k, vec_col,
+                 "_cnrm")
 
 
 # ---------------------------------------------------------------------------
@@ -543,15 +586,7 @@ def train_pq_codebooks(df: DataFrame, dim: int, vec_col: str = "embedding",
     # while every PQ operator deliberately DROPS ragged rows
     data = (df.where(F.size(F.col(vec_col)) == dim)
               .select(F.col(vec_col).cast("array<double>").alias("_v")))
-    if sample_fraction is not None:
-        from datacanary_spark.operators.corpus_stats import (
-            _bucket_expr,
-            _hex_threshold,
-        )
-
-        data = data.where(
-            _bucket_expr(F.col("_v").cast("string"), "pq-train")
-            < F.lit(_hex_threshold(sample_fraction)))
+    data = _train_sample(data, sample_fraction, "pq-train")
     data = data.persist()
     try:
         books = []
@@ -574,16 +609,23 @@ def _pq_dists_col(vec: Column, codebooks: np.ndarray, m: int) -> Column:
     expansion parsed ~10^3 nodes per subspace; see _centroid_dots).
     The subvector slice binds once per row via the one-element
     transform trick; arithmetic (sequential fold, ``n2 - 2.0*dot``)
-    is unchanged, so the array is bit-identical to the SQL form's."""
+    is unchanged, so the array is bit-identical to that expansion's."""
     sub = codebooks.shape[2]
     norms = _lit_dvec([_seq_dot(c, c) for c in codebooks[m]])
     books = _lit_matrix(codebooks[m])
-    return F.element_at(
-        F.transform(F.array(F.slice(vec, m * sub + 1, sub)),
-                    lambda s: F.zip_with(
-                        norms, books,
-                        lambda n2, c: n2 - F.lit(2.0) * dot_expr(s, c))),
-        1)
+    return _bind(F.slice(vec, m * sub + 1, sub), lambda s: F.zip_with(
+        norms, books, lambda n2, c: n2 - F.lit(2.0) * dot_expr(s, c)))
+
+
+def _pq_codes(vec: Column, codebooks: np.ndarray) -> Column:
+    """``array<int>`` codes of ``vec`` (a column or a bound residual):
+    per subspace the first argmin of its ``_pq_dists_col`` array."""
+    # bind each dist array ONCE (argmin reads it twice — higher-order
+    # subtrees get no subexpression elimination, see ivf_cell_expr)
+    return F.array(*[
+        _bind(_pq_dists_col(vec, codebooks, m),
+              lambda d: (F.array_position(d, F.array_min(d)) - 1).cast("int"))
+        for m in range(codebooks.shape[0])])
 
 
 def pq_encode_expr(vec_col: str, codebooks: np.ndarray) -> Column:
@@ -597,43 +639,35 @@ def pq_encode_expr(vec_col: str, codebooks: np.ndarray) -> Column:
     vector encodes to a null code array — the same guard the UDF twin
     applies, so the two dispatch modes agree row-for-row."""
     n_sub, _, sub = codebooks.shape
-    dim = n_sub * sub
     vec = F.col(vec_col)
-    codes = []
-    for m in range(n_sub):
-        dists = _pq_dists_col(vec, codebooks, m)
-        # bind the dist array ONCE (argmin reads it twice — higher-order
-        # subtrees get no subexpression elimination, see ivf_cell_expr)
-        codes.append(F.element_at(
-            F.transform(F.array(dists),
-                        lambda d: (F.array_position(d, F.array_min(d))
-                                   - 1).cast("int")), 1))
-    return F.when(F.size(vec) == dim, F.array(*codes))
+    return F.when(F.size(vec) == n_sub * sub, _pq_codes(vec, codebooks))
 
 
-def make_pq_encode_udf(df: DataFrame, codebooks: np.ndarray):
-    """Arrow pandas UDF twin of ``pq_encode_expr`` for high dims —
-    broadcast codebook tensor, one matmul + argmin per subspace per
-    Arrow batch.  ``np.argmin`` returns the first minimum, matching the
-    literal expression's smallest-id tie-break; null/ragged rows → null
-    code array (literal parity)."""
-    bc = df.sparkSession.sparkContext.broadcast(
-        np.asarray(codebooks, dtype=np.float64))
+def _encode_col(df: DataFrame, vec_col: str, cb: np.ndarray, mode: str,
+                cents: np.ndarray | None = None) -> Column:
+    """PQ codes of ``vec_col`` in either dispatch mode; residual codes
+    given ``cents`` (the UDF then also reads ``df``'s ``cell``)."""
+    if mode == "literal":
+        return (pq_encode_expr(vec_col, cb) if cents is None
+                else pq_residual_encode_expr(vec_col, cents, cb))
+    arrays, cols = (([cb], [F.col(vec_col)]) if cents is None
+                    else ([cb, cents], [F.col(vec_col), F.col("cell")]))
+    return _matrix_udf(df, "array<int>", cb.shape[0] * cb.shape[2],
+                       _encode_kernel, *arrays)(*cols)
 
-    @pandas_udf("array<int>")
-    def pq_encode(vecs: pd.Series) -> pd.Series:
-        cb = bc.value
-        n_sub, _, sub = cb.shape
-        M, valid = _vec_matrix(vecs, n_sub * sub)
-        out = np.empty((len(vecs), n_sub), dtype="int32")
-        for m in range(n_sub):
-            S = M[:, m * sub:(m + 1) * sub]
-            dists = (cb[m] ** 2).sum(axis=1)[None, :] - 2.0 * (S @ cb[m].T)
-            out[:, m] = np.argmin(dists, axis=1)
-        return pd.Series([out[i] if valid[i] else None
-                          for i in range(len(vecs))], index=vecs.index)
 
-    return pq_encode
+def _decode_col(df: DataFrame, cb: np.ndarray, mode: str,
+                cents: np.ndarray | None = None) -> Column:
+    """Reconstruction of ``df``'s materialized ``codes`` (and, given
+    ``cents``, residual ``cell``) columns in either dispatch mode."""
+    if mode == "literal":
+        return (pq_reconstruct_expr(F.col("codes"), cb) if cents is None
+                else pq_residual_reconstruct_expr("cell", F.col("codes"),
+                                                  cents, cb))
+    arrays, cols = (([cb], [F.col("codes")]) if cents is None
+                    else ([cb, cents], [F.col("codes"), F.col("cell")]))
+    return _matrix_udf(df, "array<double>", cb.shape[0], _decode_kernel,
+                       *arrays)(*cols)
 
 
 def pq_reconstruct_expr(codes: Column, codebooks: np.ndarray) -> Column:
@@ -654,84 +688,38 @@ def pq_reconstruct_expr(codes: Column, codebooks: np.ndarray) -> Column:
     the whole job on the first mismatched row.  CASE WHEN evaluates
     its branches lazily, so the guarded lookup never raises."""
     n_sub, n_codes, _ = codebooks.shape
-    parts = []
-    for m in range(n_sub):
-        # one-call literal matrix per book (r06; see _lit_matrix)
-        book = _lit_matrix(codebooks[m])
-        parts.append(F.element_at(book, F.element_at(codes, m + 1) + 1))
+    # one-call literal matrix per book (r06; see _lit_matrix)
+    parts = [F.element_at(_lit_matrix(codebooks[m]),
+                          F.element_at(codes, m + 1) + 1)
+             for m in range(n_sub)]
     geometry_ok = (F.size(codes) == n_sub) & F.forall(
         codes, lambda c: (c >= 0) & (c < n_codes))
     return F.when(geometry_ok, F.concat(*parts))
 
 
-def _sql_f(x: float) -> str:
-    """A Spark-SQL DOUBLE literal: ``repr`` round-trips the exact bits
-    and the ``D`` suffix stops ANSI mode from parsing it as DECIMAL."""
-    return f"{float(x)!r}D"
+def _pq_fused_decode(vec: Column, codebooks: np.ndarray,
+                     centroid: Column | None = None) -> Column:
+    """Encode + decode of ``vec`` in one expression (each distance array
+    bound once, its argmin picks the book row), plus the matching slice
+    of ``centroid`` when given (residual mode)."""
+    n_sub, _, sub = codebooks.shape
+    parts = []
+    for m in range(n_sub):
+        book = _lit_matrix(codebooks[m])
 
+        # single-parameter lambda (two would bind the array INDEX);
+        # closure capture of `book`/`m` is safe — F.transform invokes
+        # the lambda eagerly, within this loop iteration
+        def pick(d: Column) -> Column:
+            row = F.element_at(
+                book, F.array_position(d, F.array_min(d)).cast("int"))
+            if centroid is None:
+                return row
+            return F.zip_with(row, F.slice(centroid, m * sub + 1, sub),
+                              lambda a, b: a + b)
 
-def _sql_vec(values) -> str:
-    return "array(" + ",".join(_sql_f(x) for x in values) + ")"
-
-
-def _sql_dot(a_sql: str, b_sql: str) -> str:
-    """SQL-text twin of ``dot_expr`` — identical cast/fold structure so
-    the two construction paths are bit-for-bit interchangeable."""
-    return (f"aggregate(zip_with({a_sql}, {b_sql}, "
-            f"(x, y) -> cast(x as double) * cast(y as double)), "
-            f"0.0D, (acc, v) -> acc + v)")
-
-
-def _vec_sql_ref(vec: str) -> str:
-    """A vec argument for the SQL generators: a plain identifier is
-    backtick-quoted; anything containing ``(`` is already a SQL
-    expression (e.g. the residual ``zip_with``) and passes through."""
-    return vec if "(" in vec else f"`{vec}`"
-
-
-def _pq_dists_sql(vec_col: str, codebooks: np.ndarray, m: int) -> str:
-    """The subspace-m distance array ``||c||^2 - 2*dot(s, c)`` as SQL
-    text (the ``||s||^2`` term is constant within the argmin)."""
-    sub = codebooks.shape[2]
-    s = f"slice({_vec_sql_ref(vec_col)}, {m * sub + 1}, {sub})"
-    return "array(" + ",".join(
-        f"({_sql_f(_seq_dot(c, c))} - 2.0D * {_sql_dot(s, _sql_vec(c))})"
-        for c in codebooks[m]) + ")"
-
-
-def _sql_vec2d(matrix) -> str:
-    """A literal array<array<double>> (row-indexed with element_at)."""
-    return "array(" + ",".join(_sql_vec(row) for row in matrix) + ")"
-
-
-def _ivf_cell_sql(vec_ref: str, centroids: np.ndarray) -> str:
-    """SQL-text twin of ``ivf_cell_expr`` (nearest-centroid argmax,
-    ties → smallest id) for embedding inside fused residual
-    expressions — the dots array binds once via the same
-    one-element-transform trick."""
-    dots = "array(" + ",".join(
-        _sql_dot(vec_ref, _sql_vec(c)) for c in centroids) + ")"
-    return (f"element_at(transform(array({dots}), "
-            f"d -> cast(array_position(d, array_max(d)) - 1 as int)), 1)")
-
-
-def _residual_bound_sql(vec_col: str, centroids: np.ndarray,
-                        body: str) -> str:
-    """Scaffolding shared by the fused residual expressions: binds the
-    cell id as lambda variable ``cl`` and the residual vector
-    ``x - centroid[cl]`` as lambda variable ``r``, each evaluated
-    exactly ONCE per row, then splices ``body`` (which references
-    ``cl``/``r``) inside.  Without this binding, project-collapse (or
-    plain SQL-text repetition) would re-evaluate the 16-dot cell
-    assignment and the dim-wide residual once per subspace-distance
-    term — ~10^2× the intended work (the same class of blowup the
-    raw-vector fused path documents)."""
-    vec = _vec_sql_ref(vec_col)
-    cell = _ivf_cell_sql(vec, centroids)
-    res = (f"zip_with({vec}, element_at({_sql_vec2d(centroids)}, cl + 1), "
-           f"(x, y) -> cast(x as double) - cast(y as double))")
-    return (f"element_at(transform(array({cell}), cl -> "
-            f"element_at(transform(array({res}), r -> {body}), 1)), 1)")
+        parts.append(_bind(_pq_dists_col(vec, codebooks, m), pick))
+    return F.concat(*parts)
 
 
 def pq_reconstruct_from_vec_expr(vec_col: str,
@@ -755,21 +743,7 @@ def pq_reconstruct_from_vec_expr(vec_col: str,
     lambda is constructed once per subspace (see ``_pq_dists_col``) —
     a few hundred nodes, a few hundred py4j calls, bit-identical
     arithmetic."""
-    n_sub = codebooks.shape[0]
-    vec = F.col(vec_col)
-    parts = []
-    for m in range(n_sub):
-        dists = _pq_dists_col(vec, codebooks, m)
-        book = _lit_matrix(codebooks[m])
-        # single-parameter lambda (two would bind the array INDEX);
-        # closure capture of `book` is safe — F.transform invokes the
-        # lambda eagerly, within this loop iteration
-        parts.append(F.element_at(
-            F.transform(F.array(dists),
-                        lambda d: F.element_at(
-                            book, F.array_position(d, F.array_min(d))
-                            .cast("int"))), 1))
-    return F.concat(*parts)
+    return _pq_fused_decode(F.col(vec_col), codebooks)
 
 
 def pq_residual_reconstruct_from_vec_expr(vec_col: str,
@@ -782,23 +756,10 @@ def pq_residual_reconstruct_from_vec_expr(vec_col: str,
     0.43 composed recall on the clustered fixture vs 0.96 for the
     pruning tier alone); quantizing the residual restores the
     within-cluster detail the ranking needs.  Cell and residual bind
-    once via ``_residual_bound_sql``; per-subspace distance arrays
-    bind once as in the raw variant."""
-    n_sub, _, sub = codebooks.shape
-    ctr = f"element_at({_sql_vec2d(centroids)}, cl + 1)"
-    parts = []
-    for m in range(n_sub):
-        dists = _pq_dists_sql("r", codebooks, m)
-        book = ("array(" + ",".join(_sql_vec(c) for c in codebooks[m])
-                + ")")
-        ctr_slice = f"slice({ctr}, {m * sub + 1}, {sub})"
-        parts.append(
-            f"element_at(transform(array({dists}), "
-            f"d -> zip_with(element_at({book}, "
-            f"cast(array_position(d, array_min(d)) as int)), "
-            f"{ctr_slice}, (a, b) -> a + b)), 1)")
-    body = "concat(" + ",".join(parts) + ")"
-    return F.expr(_residual_bound_sql(vec_col, centroids, body))
+    once via ``_residual_bound``; per-subspace distance arrays bind
+    once as in the raw variant (the same ``_pq_fused_decode``)."""
+    return _residual_bound(F.col(vec_col), centroids,
+                           lambda ctr, r: _pq_fused_decode(r, codebooks, ctr))
 
 
 def pq_residual_encode_expr(vec_col: str, centroids: np.ndarray,
@@ -808,77 +769,9 @@ def pq_residual_encode_expr(vec_col: str, centroids: np.ndarray,
     disk.  Null/ragged vectors → null codes (size guard, as in the
     raw encoder)."""
     n_sub, _, sub = codebooks.shape
-    dim = n_sub * sub
-    codes = []
-    for m in range(n_sub):
-        dists = _pq_dists_sql("r", codebooks, m)
-        codes.append(
-            f"element_at(transform(array({dists}), "
-            f"d -> cast(array_position(d, array_min(d)) - 1 as int)), 1)")
-    body = f"array({','.join(codes)})"
-    return F.expr(
-        f"case when size({_vec_sql_ref(vec_col)}) = {dim} then "
-        f"{_residual_bound_sql(vec_col, centroids, body)} end")
-
-
-def make_pq_residual_encode_udf(df: DataFrame, centroids: np.ndarray,
-                                codebooks: np.ndarray):
-    """Arrow pandas UDF twin of ``pq_residual_encode_expr``, taking
-    (vec, cell) and encoding the residual against the cell centroid.
-    Null/ragged vectors and null cells → null codes."""
-    bc_c = df.sparkSession.sparkContext.broadcast(
-        np.asarray(centroids, dtype=np.float64))
-    bc_b = df.sparkSession.sparkContext.broadcast(
-        np.asarray(codebooks, dtype=np.float64))
-
-    @pandas_udf("array<int>")
-    def pq_residual_encode(vecs: pd.Series, cells: pd.Series) -> pd.Series:
-        cents, cb = bc_c.value, bc_b.value
-        n_sub, _, sub = cb.shape
-        M, valid = _vec_matrix(vecs, n_sub * sub)
-        cell_idx = cells.to_numpy(dtype="float64", na_value=np.nan)
-        ok = valid & ~np.isnan(cell_idx)
-        R = M - cents[np.where(ok, cell_idx, 0).astype(int)]
-        out = np.empty((len(vecs), n_sub), dtype="int32")
-        for m in range(n_sub):
-            S = R[:, m * sub:(m + 1) * sub]
-            dists = (cb[m] ** 2).sum(axis=1)[None, :] - 2.0 * (S @ cb[m].T)
-            out[:, m] = np.argmin(dists, axis=1)
-        return pd.Series([out[i] if ok[i] else None
-                          for i in range(len(vecs))], index=vecs.index)
-
-    return pq_residual_encode
-
-
-def make_pq_residual_reconstruct_udf(df: DataFrame, centroids: np.ndarray,
-                                     codebooks: np.ndarray):
-    """Arrow pandas UDF twin of the residual reconstruction: (cell,
-    codes) → ``centroid[cell] + decode(codes)``, with the same full
-    geometry guard as ``make_pq_reconstruct_udf``."""
-    bc_c = df.sparkSession.sparkContext.broadcast(
-        np.asarray(centroids, dtype=np.float64))
-    bc_b = df.sparkSession.sparkContext.broadcast(
-        np.asarray(codebooks, dtype=np.float64))
-
-    @pandas_udf("array<double>")
-    def pq_residual_reconstruct(cells: pd.Series,
-                                codes: pd.Series) -> pd.Series:
-        cents, cb = bc_c.value, bc_b.value
-        n_cells = cents.shape[0]
-        n_sub, n_codes = cb.shape[0], cb.shape[1]
-        out = []
-        for cell, code in zip(cells, codes):
-            if (cell is None or code is None or not 0 <= cell < n_cells
-                    or len(code) != n_sub
-                    or any(c is None or c < 0 or c >= n_codes
-                           for c in code)):
-                out.append(None)
-            else:
-                out.append(cents[int(cell)] + np.concatenate(
-                    [cb[m][int(code[m])] for m in range(n_sub)]))
-        return pd.Series(out, index=cells.index)
-
-    return pq_residual_reconstruct
+    vec = F.col(vec_col)
+    return F.when(F.size(vec) == n_sub * sub, _residual_bound(
+        vec, centroids, lambda ctr, r: _pq_codes(r, codebooks)))
 
 
 def pq_residual_reconstruct_expr(cell_col: str, codes: Column,
@@ -888,14 +781,11 @@ def pq_residual_reconstruct_expr(cell_col: str, codes: Column,
     codes) columns (the stored-index serving path):
     ``centroid[cell] + decode(codes)``, with the same geometry guard
     as ``pq_reconstruct_expr`` plus a cell-range check."""
-    n_cells = centroids.shape[0]
-    base = pq_reconstruct_expr(codes, codebooks)
     cell = F.col(cell_col)
-    ctr = F.element_at(F.lit([[float(x) for x in row]
-                              for row in centroids]), cell + 1)
-    guarded = F.when((cell >= 0) & (cell < n_cells),
-                     F.zip_with(base, ctr, lambda a, b: a + b))
-    return guarded
+    ctr = F.element_at(_lit_matrix(centroids), cell + 1)
+    return F.when((cell >= 0) & (cell < centroids.shape[0]),
+                  F.zip_with(pq_reconstruct_expr(codes, codebooks), ctr,
+                             lambda a, b: a + b))
 
 
 def _pack_recon(recon: Column) -> Column:
@@ -904,36 +794,8 @@ def _pack_recon(recon: Column) -> Column:
     recon expression from two output columns would re-evaluate it per
     reference (project-collapse duplication); referencing the packed
     struct's FIELDS from across a join boundary is attribute access."""
-    return F.element_at(F.transform(F.array(recon), lambda v: F.struct(
-        v.alias("recon"), F.sqrt(dot_expr(v, v)).alias("cnrm"))), 1)
-
-
-def make_pq_reconstruct_udf(df: DataFrame, codebooks: np.ndarray):
-    """Arrow pandas UDF twin of ``pq_reconstruct_expr`` (the plan-flat
-    path when the codebook tensor exceeds the literal budget)."""
-    bc = df.sparkSession.sparkContext.broadcast(
-        np.asarray(codebooks, dtype=np.float64))
-
-    @pandas_udf("array<double>")
-    def pq_reconstruct(codes: pd.Series) -> pd.Series:
-        cb = bc.value
-        n_sub, n_codes = cb.shape[0], cb.shape[1]
-        out = []
-        for code in codes:
-            # full geometry guard, same as the literal expression: a
-            # mismatched row decodes to null — an out-of-range code
-            # would raise (or, negative, silently WRAP via numpy
-            # indexing) instead of degrading one row
-            if (code is None or len(code) != n_sub
-                    or any(c is None or c < 0 or c >= n_codes
-                           for c in code)):
-                out.append(None)
-            else:
-                out.append(np.concatenate(
-                    [cb[m][int(code[m])] for m in range(n_sub)]))
-        return pd.Series(out, index=codes.index)
-
-    return pq_reconstruct
+    return _bind(recon, lambda v: F.struct(
+        v.alias("recon"), F.sqrt(dot_expr(v, v)).alias("cnrm")))
 
 
 def pq_encode_index(df: DataFrame, dim: int, id_col: str = "vec_id",
@@ -948,8 +810,8 @@ def pq_encode_index(df: DataFrame, dim: int, id_col: str = "vec_id",
     int→byte cast a columnar store applies).  ``pq_topk`` accepts this
     frame via ``codes_col`` so a 10^12-row corpus is encoded once and
     served from the compact table."""
-    cb = pq_codebooks(dim, n_sub, n_codes, seed) if codebooks is None \
-        else np.asarray(codebooks, dtype=np.float64)
+    _, cb, mode = _quantizers(dim, assignment, seed, n_sub=n_sub,
+                              n_codes=n_codes, codebooks=codebooks)
     # filter on the EQUIVALENT raw condition (right length; size(null)
     # is null under ANSI, so nulls drop too) instead of codes
     # IS NOT NULL: a post-encode null filter would push back through
@@ -958,22 +820,23 @@ def pq_encode_index(df: DataFrame, dim: int, id_col: str = "vec_id",
     # corpus would otherwise encode on one core (no-op at real scale).
     c = _spread(df.where(F.size(F.col(vec_col)) == dim).select(
         F.col(id_col), F.col(vec_col)))
-    mode = _resolve_assignment(assignment, cb.size)
-    codes = (make_pq_encode_udf(c, cb)(F.col(vec_col)) if mode == "udf"
-             else pq_encode_expr(vec_col, cb))
-    return c.select(F.col(id_col), codes.alias("codes"))
+    return c.select(F.col(id_col),
+                    _encode_col(c, vec_col, cb, mode).alias("codes"))
 
 
-def _query_frame(queries: DataFrame, dim: int, vec_col: str,
+def _query_frame(queries: DataFrame, dim: int | None, vec_col: str,
                  query_id_col: str) -> DataFrame:
     """The shared query side: (query_id, _qvec, _qnrm), with null AND
-    wrong-length vectors dropped.  The length filter is load-bearing
+    wrong-length vectors dropped (only null ones when ``dim`` is None,
+    the brute-force/LSH contract).  The length filter is load-bearing
     for dispatch parity: a ragged query under the literal probe
     expressions degenerates to null-dot probes (k null-score rows)
     while the UDF probe drops it — so without the filter,
     ``assignment="auto"`` would change the RESULT SET as dim crosses
     the literal budget."""
-    return queries.where(F.size(F.col(vec_col)) == dim).select(
+    keep = (F.col(vec_col).isNotNull() if dim is None
+            else F.size(F.col(vec_col)) == dim)
+    return queries.where(keep).select(
         F.col(query_id_col), F.col(vec_col).alias("_qvec"),
         norm_expr(F.col(vec_col)).alias("_qnrm"))
 
@@ -981,9 +844,13 @@ def _query_frame(queries: DataFrame, dim: int, vec_col: str,
 def _probe_explode(q: DataFrame, cents: np.ndarray, n_probe: int,
                    mode: str) -> DataFrame:
     """Explode each query row into its n_probe (row, cell) probes."""
-    probe = (make_ivf_probe_udf(q, cents, n_probe)(F.col("_qvec"))
-             if mode == "udf"
-             else ivf_probe_cells_expr(F.col("_qvec"), cents, n_probe))
+    if mode == "udf":
+        probe = _matrix_udf(
+            q, "array<int>", cents.shape[1],
+            lambda M, ok, C: _probe_kernel(M, ok, C, n_probe),
+            cents)(F.col("_qvec"))
+    else:
+        probe = ivf_probe_cells_expr(F.col("_qvec"), cents, n_probe)
     return q.withColumn("cell", F.explode(probe))
 
 
@@ -1010,59 +877,25 @@ def _ivfpq_corpus_frame(corpus: DataFrame, dim: int, id_col: str,
     # them on one core (no-op at real scale)
     c = _spread(corpus.where(F.size(F.col(vec_col)) == dim).select(
         F.col(id_col), F.col(vec_col)))
-    if mode == "udf":
-        cell = make_ivf_cell_udf(c, cents)(F.col(vec_col))
-        c = c.select(F.col(id_col), F.col(vec_col), cell.alias("cell"))
-        enc = (make_pq_residual_encode_udf(c, cents, cb)(
-                   F.col(vec_col), F.col("cell")) if residual
-               else make_pq_encode_udf(c, cb)(F.col(vec_col)))
-        c = c.select(F.col(id_col), F.col("cell"), enc.alias("codes"))
+    c = c.select(F.col(id_col), F.col(vec_col),
+                 _cell_col(c, vec_col, cents, mode).alias("cell"))
+    # literal residual: each fused expression binds its OWN cell
+    # internally (_residual_bound) — the standalone cell column
+    # recomputes the 16-dot assignment once more per row, which is
+    # cheaper than any cross-column sharing attempt project-collapse
+    # would undo (it substitutes, never shares)
+    res_cents = cents if residual else None
+    if mode == "literal" and packed:
+        recon = (pq_residual_reconstruct_from_vec_expr(vec_col, cents, cb)
+                 if residual else pq_reconstruct_from_vec_expr(vec_col, cb))
+    else:
+        c = c.select(F.col(id_col), F.col("cell"), _encode_col(
+            c, vec_col, cb, mode, res_cents).alias("codes"))
         if not packed:
             return c
-        recon = (make_pq_residual_reconstruct_udf(c, cents, cb)(
-                     F.col("cell"), F.col("codes")) if residual
-                 else make_pq_reconstruct_udf(c, cb)(F.col("codes")))
-        return c.select(F.col(id_col), F.col("cell"),
-                        _pack_recon(recon).alias("_pk"))
-    if residual:
-        # each fused expression binds its OWN cell internally
-        # (_residual_bound_sql) — the standalone cell column recomputes
-        # the 16-dot assignment once more per row, which is cheaper
-        # than any cross-column sharing attempt project-collapse would
-        # undo (it substitutes, never shares)
-        cell = ivf_cell_expr(F.col(vec_col), cents).alias("cell")
-        if not packed:
-            return c.select(
-                F.col(id_col), cell,
-                pq_residual_encode_expr(vec_col, cents, cb)
-                .alias("codes"))
-        return c.select(
-            F.col(id_col), cell,
-            _pack_recon(pq_residual_reconstruct_from_vec_expr(
-                vec_col, cents, cb)).alias("_pk"))
-    cell = ivf_cell_expr(F.col(vec_col), cents).alias("cell")
-    if not packed:
-        return c.select(F.col(id_col), cell,
-                        pq_encode_expr(vec_col, cb).alias("codes"))
-    return c.select(
-        F.col(id_col), cell,
-        _pack_recon(pq_reconstruct_from_vec_expr(vec_col, cb))
-        .alias("_pk"))
-
-
-def _adc_topk(c: DataFrame, q: DataFrame, query_id_col: str, id_col: str,
-              k: int, on_cell: bool) -> DataFrame:
-    """ONE definition of the ADC scoring tail (same rationale as
-    ``_topk``): join the packed corpus frame to the query frame — cell
-    equi-join for the pruned paths, broadcast full scan for plain
-    PQ — and score cos(q, decode(codes)) from the packed struct."""
-    joined = c.join(q, "cell") if on_cell else c.join(F.broadcast(q))
-    scored = joined.select(
-        F.col(query_id_col),
-        F.col(id_col).alias("neighbor_id"),
-        F.try_divide(dot_expr(F.col("_pk.recon"), F.col("_qvec")),
-                     F.col("_pk.cnrm") * F.col("_qnrm")).alias("score"))
-    return _topk(scored, query_id_col, k)
+        recon = _decode_col(c, cb, mode, res_cents)
+    return c.select(F.col(id_col), F.col("cell"),
+                    _pack_recon(recon).alias("_pk"))
 
 
 def pq_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
@@ -1089,9 +922,8 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
     ``codes_col``: score a pre-encoded index (``pq_encode_index``)
     instead of encoding in-flight — the 10^12-doc serving path.
     """
-    cb = pq_codebooks(dim, n_sub, n_codes, seed) if codebooks is None \
-        else np.asarray(codebooks, dtype=np.float64)
-    mode = _resolve_assignment(assignment, cb.size)
+    _, cb, mode = _quantizers(dim, assignment, seed, n_sub=n_sub,
+                              n_codes=n_codes, codebooks=codebooks)
     # _spread runs on the NARROW frame, before the reconstruction
     # expression is attached (r06): spreading the packed projection put
     # the heaviest per-row expression in the file below the exchange
@@ -1104,16 +936,14 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
         c = _spread(corpus.select(F.col(id_col),
                                   F.col(codes_col).alias("codes"))
                     .where(F.col("codes").isNotNull()))
-        recon = (make_pq_reconstruct_udf(c, cb)(F.col("codes"))
-                 if mode == "udf"
-                 else pq_reconstruct_expr(F.col("codes"), cb))
+        recon = _decode_col(c, cb, mode)
     elif mode == "udf":
         # pq_encode_index spreads its own narrow input before the
         # encode UDF; an outer spread here would land BELOW that
         # projection and serialize the Arrow encode onto one task
         c = pq_encode_index(corpus, dim, id_col=id_col, vec_col=vec_col,
                             codebooks=cb, assignment=mode)
-        recon = make_pq_reconstruct_udf(c, cb)(F.col("codes"))
+        recon = _decode_col(c, cb, mode)
     else:
         # in-flight literal path: encode+decode fused so each distance
         # array evaluates once per row (see pq_reconstruct_from_vec_expr)
@@ -1122,7 +952,7 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
         recon = pq_reconstruct_from_vec_expr(vec_col, cb)
     c = c.select(F.col(id_col), _pack_recon(recon).alias("_pk"))
     q = _query_frame(queries, dim, vec_col, query_id_col)
-    return _adc_topk(c, q, query_id_col, id_col, k, on_cell=False)
+    return _topk(c.join(F.broadcast(q)), query_id_col, id_col, k)
 
 
 def ivf_pq_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
@@ -1141,17 +971,13 @@ def ivf_pq_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
     (one shuffle, AQE-skew-safe), scores from ADC reconstruction —
     both exactly as in the parent operators, so recall multiplies the
     two approximations and the tie-break contract is unchanged."""
-    cents = ivf_centroids(dim, n_centroids, seed) if centroids is None \
-        else np.asarray(centroids, dtype=np.float64)
-    cb = pq_codebooks(dim, n_sub, n_codes, seed) if codebooks is None \
-        else np.asarray(codebooks, dtype=np.float64)
-    mode = _resolve_assignment(assignment,
-                               max(cb.size, dim * len(cents)))
+    cents, cb, mode = _quantizers(dim, assignment, seed, n_centroids,
+                                  centroids, n_sub, n_codes, codebooks)
     c = _ivfpq_corpus_frame(corpus, dim, id_col, vec_col, cents, cb,
                             mode, packed=True, residual=residual)
     q = _probe_explode(_query_frame(queries, dim, vec_col, query_id_col),
                        cents, n_probe, mode)
-    return _adc_topk(c, q, query_id_col, id_col, k, on_cell=True)
+    return _topk(c.join(q, "cell"), query_id_col, id_col, k)
 
 
 def ivfpq_write_index(corpus: DataFrame, path: str, dim: int,
@@ -1177,12 +1003,8 @@ def ivfpq_write_index(corpus: DataFrame, path: str, dim: int,
     index as ``_quantizers.json``)."""
     from datacanary_spark.sources.io import write_table
 
-    cents = ivf_centroids(dim, n_centroids, seed) if centroids is None \
-        else np.asarray(centroids, dtype=np.float64)
-    cb = pq_codebooks(dim, n_sub, n_codes, seed) if codebooks is None \
-        else np.asarray(codebooks, dtype=np.float64)
-    mode = _resolve_assignment(assignment,
-                               max(cb.size, dim * len(cents)))
+    cents, cb, mode = _quantizers(dim, assignment, seed, n_centroids,
+                                  centroids, n_sub, n_codes, codebooks)
     c = _ivfpq_corpus_frame(corpus, dim, id_col, vec_col, cents, cb,
                             mode, packed=False, residual=residual)
     write_table(c, path, mode="overwrite", partition_by=["cell"])
@@ -1211,30 +1033,18 @@ def ivfpq_query_index(spark, path: str, queries: DataFrame, dim: int,
     once for the bounded cells collect, once in the join — which is
     O(n_queries · n_centroids) arithmetic on the tiny side, not a
     corpus cost.)"""
-    cents = ivf_centroids(dim, n_centroids, seed) if centroids is None \
-        else np.asarray(centroids, dtype=np.float64)
-    cb = pq_codebooks(dim, n_sub, n_codes, seed) if codebooks is None \
-        else np.asarray(codebooks, dtype=np.float64)
-    mode = _resolve_assignment(assignment,
-                               max(cb.size, dim * len(cents)))
+    cents, cb, mode = _quantizers(dim, assignment, seed, n_centroids,
+                                  centroids, n_sub, n_codes, codebooks)
     q = _probe_explode(_query_frame(queries, dim, vec_col, query_id_col),
                        cents, n_probe, mode)
     # bounded driver collect: the distinct probed cells (≤ n_centroids)
     cells = sorted({r["cell"] for r in q.select("cell").distinct()
                     .collect()})
     idx = spark.read.parquet(path).where(F.col("cell").isin(cells))
-    if residual:
-        recon = (make_pq_residual_reconstruct_udf(idx, cents, cb)(
-                     F.col("cell"), F.col("codes")) if mode == "udf"
-                 else pq_residual_reconstruct_expr("cell", F.col("codes"),
-                                                   cents, cb))
-    else:
-        recon = (make_pq_reconstruct_udf(idx, cb)(F.col("codes"))
-                 if mode == "udf"
-                 else pq_reconstruct_expr(F.col("codes"), cb))
+    recon = _decode_col(idx, cb, mode, cents if residual else None)
     c = idx.select(F.col(id_col), F.col("cell"),
                    _pack_recon(recon).alias("_pk"))
-    return _adc_topk(c, q, query_id_col, id_col, k, on_cell=True)
+    return _topk(c.join(q, "cell"), query_id_col, id_col, k)
 
 
 def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
@@ -1267,6 +1077,12 @@ def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
     # with bit-identical results (same sqrt/multiply sequence).
     base = df.select(F.col(id_col), F.col(vec_col).alias("_v"),
                      norm_expr(F.col(vec_col)).alias("_nrm"))
+
+    def side(s: str) -> DataFrame:  # one self-join side: (id_s, vs, ns)
+        return base.select(F.col(id_col).alias(f"id_{s}"),
+                           F.col("_v").alias(f"v{s}"),
+                           F.col("_nrm").alias(f"n{s}"))
+
     if use_lsh:
         from datacanary_spark.plans.caching import maybe_persist
 
@@ -1292,23 +1108,13 @@ def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
                  .where(F.col("id_a") < F.col("id_b"))
                  .select("id_a", "id_b")
                  .dropDuplicates())
-        pairs = (cand
-                 .join(base.select(F.col(id_col).alias("id_a"),
-                                   F.col("_v").alias("va"),
-                                   F.col("_nrm").alias("na")), "id_a")
-                 .join(base.select(F.col(id_col).alias("id_b"),
-                                   F.col("_v").alias("vb"),
-                                   F.col("_nrm").alias("nb")), "id_b"))
+        pairs = cand.join(side("a"), "id_a").join(side("b"), "id_b")
     else:
         # the left side STREAMS through the nested-loop join — spread it
         # across cores (a one-file test-scale scan is 1 partition, which
         # would run the whole quadratic stage single-threaded)
-        left = _spread(base.select(F.col(id_col).alias("id_a"),
-                                   F.col("_v").alias("va"),
-                                   F.col("_nrm").alias("na")))
-        right = base.select(F.col(id_col).alias("id_b"),
-                            F.col("_v").alias("vb"), F.col("_nrm").alias("nb"))
-        pairs = left.join(right, F.col("id_a") < F.col("id_b"))
+        pairs = _spread(side("a")).join(side("b"),
+                                        F.col("id_a") < F.col("id_b"))
     score = F.try_divide(dot_expr(F.col("va"), F.col("vb")),
                          F.col("na") * F.col("nb"))
     return (pairs
@@ -1365,16 +1171,11 @@ def semdedup(df: DataFrame, dim: int, threshold: float = 0.95,
     """
     from datacanary_spark.plans.caching import maybe_persist
 
-    cents = ivf_centroids(dim, n_centroids, seed) if centroids is None \
-        else centroids
-    mode = _resolve_assignment(assignment, dim * len(cents))
+    cents, _, mode = _quantizers(dim, assignment, seed, n_centroids,
+                                 centroids)
     base = _spread(df).select(F.col(id_col), F.col(vec_col).alias("_v"),
                               norm_expr(F.col(vec_col)).alias("_nrm"))
-    if mode == "udf":
-        cell_udf = make_ivf_cell_udf(base, cents)
-        base = base.withColumn("cell", cell_udf(F.col("_v")))
-    else:
-        base = base.withColumn("cell", ivf_cell_expr(F.col("_v"), cents))
+    base = base.withColumn("cell", _cell_col(base, "_v", cents, mode))
     base = maybe_persist(base, persist)
 
     joinable = base
@@ -1385,12 +1186,10 @@ def semdedup(df: DataFrame, dim: int, threshold: float = 0.95,
         w = Window.partitionBy("cell")
         joinable = (base.withColumn("_csz", F.count(F.lit(1)).over(w))
                         .where(F.col("_csz") <= max_cell).drop("_csz"))
-    left = joinable.select(
-        F.col("cell").alias("_ca"), F.col(id_col).alias("_ida"),
-        F.col("_v").alias("_va"), F.col("_nrm").alias("_na"))
-    right = joinable.select(
-        F.col("cell").alias("_cb"), F.col(id_col).alias("_idb"),
-        F.col("_v").alias("_vb"), F.col("_nrm").alias("_nb"))
+    left, right = (joinable.select(
+        F.col("cell").alias(f"_c{s}"), F.col(id_col).alias(f"_id{s}"),
+        F.col("_v").alias(f"_v{s}"), F.col("_nrm").alias(f"_n{s}"))
+        for s in "ab")
     cos = F.try_divide(dot_expr(F.col("_va"), F.col("_vb")),
                        F.col("_na") * F.col("_nb"))
     dropped = (left.join(right, (F.col("_ca") == F.col("_cb"))

@@ -16,6 +16,10 @@ while Spark keeps int64/Decimal, which made 10 value-identical queries
 hash-red in round 1 (VERDICT.md).
 
 Usage: python scripts/check_oracle.py [sf_dir] [query ...]
+
+Named queries must be registered: an unknown name exits 2 before the
+Spark session starts, so a typo can never report "all exact" over
+nothing. The summary states how many queries were compared.
 """
 
 from __future__ import annotations
@@ -83,6 +87,12 @@ def main():
     import __spark_entry__ as entry
     from datacanary_spark.session import get_spark
 
+    qs = entry.queries()
+    unknown = sorted(only - qs.keys())
+    if unknown:
+        print(f"unknown query name(s): {', '.join(unknown)}", file=sys.stderr)
+        sys.exit(2)
+
     spark = get_spark(app_name="oracle_check", master="local[8]",
                       shuffle_partitions=8)
     con = duckdb.connect()
@@ -95,9 +105,9 @@ def main():
             path = f"{path}/*.parquet"
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
 
-    qs = entry.queries()
     oracles = entry.oracle_sql()
     failures = []
+    compared = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -110,6 +120,7 @@ def main():
             print(f"{name:35s} rows-only: {len(srows)} rows "
                   f"[spark {spark_sec:.1f}s]")
             continue
+        compared += 1
         rel = con.sql(oracles[name])
         drows = rel.fetchall()
         dcols = [d[0] for d in rel.description]
@@ -154,6 +165,7 @@ def main():
         if "OK exact" not in status:
             failures.append(line)
     print("\n== summary ==")
+    print(f"{compared} queries compared against the oracle")
     if failures:
         print(f"{len(failures)} non-exact:")
         for f in failures:

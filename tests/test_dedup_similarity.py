@@ -1397,6 +1397,60 @@ def test_ivfpq_persisted_index_prunes_partitions(spark, tmp_path):
         == sorted(map(tuple, served.collect()))
 
 
+def _residual_fixture(spark):
+    """200 dim-64 vectors (one null, one ragged), 16 seeded centroids,
+    8x16 seeded books."""
+    rng = np.random.default_rng(5)
+    rows = [(i, [float(x) for x in rng.normal(size=64)]) for i in range(200)]
+    rows[7] = (7, None)
+    rows[11] = (11, [1.0] * 63)
+    df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+    return df, rows, sim.ivf_centroids(64, 16), sim.pq_codebooks(64, 8, 16)
+
+
+def test_pq_residual_codes_match_sequential_reference(spark):
+    """Residual literal codes equal a pure-Python reference over the
+    same sequential fold (``_seq_dot``): first-argmax cell, the
+    residual, then per subspace the first argmin of ||c||^2 - 2 s.c.
+    Null and ragged vectors encode to null."""
+    df, rows, cents, books = _residual_fixture(spark)
+    enc = sim.pq_residual_encode_expr("embedding", cents, books)
+    got = {r["vec_id"]: r["codes"]
+           for r in df.select("vec_id", enc.alias("codes")).collect()}
+
+    def ref(x):
+        if x is None or len(x) != 64:
+            return None
+        dots = [sim._seq_dot(x, c) for c in cents]
+        cl = dots.index(max(dots))
+        r = [float(a) - float(b) for a, b in zip(x, cents[cl])]
+        codes = []
+        for m, book in enumerate(books):
+            s = r[m * 8:(m + 1) * 8]
+            d = [sim._seq_dot(c, c) - 2.0 * sim._seq_dot(s, c) for c in book]
+            codes.append(d.index(min(d)))
+        return codes
+
+    assert got == {i: ref(v) for i, v in rows}
+    assert got[7] is None and got[11] is None
+
+
+def test_pq_residual_encode_plan_stays_compact(spark):
+    """The residual encoder reuses the raw encoder's per-subspace
+    lambdas over one bound residual, so its analyzed plan stays within
+    2x of the raw encoder's (dim 64, 16 centroids, 8x16 books) — a
+    per-code expansion of the distance terms would triple it."""
+    df, _, cents, books = _residual_fixture(spark)
+
+    def plan_chars(col):
+        return len(df.select(col.alias("x"))._jdf.queryExecution()
+                   .analyzed().toString())
+
+    raw = plan_chars(sim.pq_encode_expr("embedding", books))
+    res = plan_chars(sim.pq_residual_encode_expr("embedding", cents, books))
+    assert res <= 2 * raw, (res, raw)
+
+
 def test_ivfpq_trained_recall_on_clustered_corpus(spark):
     """Composed IVFPQ quality evidence (r05): on the 16-cluster corpus
     with BOTH quantizers trained, the pruning tier is excellent
@@ -1485,7 +1539,7 @@ def test_ivfpq_residual_mode(spark, tmp_path):
     assert sorted(map(tuple, lit)) == sorted(map(tuple, udf))
 
     # books trained on the residuals (the honest residual setup)
-    res_col = F.expr(sim._residual_bound_sql("embedding", cents, "r"))
+    res_col = sim.ivf_residual_expr(F.col("embedding"), cents)
     res_e = e.select("vec_id", res_col.alias("embedding"))
     books_res = sim.train_pq_codebooks(res_e, dim=64, n_sub=8,
                                        n_codes=16)
